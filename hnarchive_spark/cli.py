@@ -14,9 +14,11 @@ and ``--mock-data`` (a JSON file of id->wire-item for offline runs; without
 it the real Firebase transport is used — unavailable in this container, so
 tests always pass --mock-data).
 
-``--threads`` maps to fetch partition count and ``--commit_period`` to the
-micro-batch size boundary (one atomic store commit per merge), per the
-reference's commit cadence (hnarchive.py:255-262).
+``--threads`` is the number of fetches in flight, as in the reference (at
+most ``defaultParallelism`` fetch tasks, the rest as threads in each task),
+and ``--commit_period`` maps to the micro-batch size boundary (one atomic
+store commit per merge), per the reference's commit cadence
+(hnarchive.py:255-262).
 """
 
 from __future__ import annotations

@@ -41,17 +41,3 @@ def hn_user_url(author: Column | str) -> Column:
     """F7 — user page template (hnarchive.py:411,419)."""
     c = F.col(author) if isinstance(author, str) else author
     return F.concat(F.lit("https://news.ycombinator.com/user?id="), c)
-
-
-def int_or_none(col: Column | str) -> Column:
-    """F2 — null-preserving int cast (hnarchive.py:91-94).
-
-    Spark's cast is already null-safe; alias kept for parity."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("long")
-
-
-def bool_or_false(col: Column | str) -> Column:
-    """F3 — bool coercion with False default (hnarchive.py:211,216)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c.cast("boolean"), F.lit(False))

@@ -40,10 +40,6 @@ def n_tokens(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def n_unique_tokens(text: Column | str) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
 def sum_token_len(text: Column | str) -> Column:
     return F.aggregate(
         tokens(text), F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)

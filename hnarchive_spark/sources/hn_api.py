@@ -1,11 +1,14 @@
 """HN Firebase API sources (SURVEY.md §2.1, S1-S6) — Spark-first.
 
 The reference fetches with a thread pool and a bounded buffer
-(hnarchive.py:139-148); here parallelism is partition count: an id range is
-repartitioned and fetched inside ``mapInPandas``, so executors do the HTTP
-fan-out and Arrow batching replaces the 250-item buffer.  Retry semantics
-(quadratic backoff, retryable-vs-fatal classification, hnarchive.py:98-117)
-live INSIDE the fetch kernel; Spark task retry is the blunt outer layer.
+(hnarchive.py:139-148); here ``parallelism`` keeps its meaning, the number
+of requests in flight.  The ids are split over ``min(parallelism,
+defaultParallelism)`` ``mapInPandas`` tasks, so executors do the HTTP
+fan-out, and each task fetches through a thread pool of the remaining
+factor (one thread per task on a cluster with enough cores); Arrow batching
+replaces the 250-item buffer.  Retry semantics (quadratic backoff,
+retryable-vs-fatal classification, hnarchive.py:98-117) live INSIDE the
+fetch kernel; Spark task retry is the blunt outer layer.
 
 Transports are injectable and picklable so tests replay recorded fixtures
 (FIXTURES.md §A2/§A3) without any network; the real HTTP transport is
@@ -17,6 +20,7 @@ from __future__ import annotations
 import json
 import time
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -144,34 +148,70 @@ def _is_retryable(exc: Exception) -> bool:
     return True
 
 
-def _fetch_kernel(transport, retries: int = 8, sleep_cap: float | None = None):
+FETCH_THREAD_PREFIX = "hn-fetch"  # names the kernel's pool threads
+
+
+def _fetch_kernel(
+    transport, retries: int = 8, sleep_cap: float | None = None, threads: int = 1
+):
     """Per-partition fetch kernel: id batches in, wire-JSON payloads out.
 
     App-level retry with quadratic backoff runs here (S1); non-retryable
     errors (HTTP 4xx other than 429) re-raise immediately, and a worker
     exception after exhaustion fails the task -> fail-fast re-raise like
     hnarchive.py:145-146. API-nulls/absences yield no row (U2).
+
+    ``threads`` > 1 fetches each batch through a thread pool (the
+    reference's hnarchive.py:139 executor), keeping the ids' order.  The
+    first error cancels the fetches not yet started; the pool is shut down
+    and its threads joined on every exit path, so none outlives the task.
     ``sleep_cap`` exists for tests only; production uses the full backoff."""
 
+    def fetch_one(item_id: int):
+        bo = FetchBackoff()
+        for attempt in range(retries):
+            try:
+                return transport.get_item(int(item_id))
+            except Exception as exc:
+                if not _is_retryable(exc) or attempt == retries - 1:
+                    raise
+                delay = bo.next()
+                time.sleep(delay if sleep_cap is None else min(delay, sleep_cap))
+
+    def frame(results) -> pd.DataFrame:
+        payloads = [json.dumps(d) for d in results if d is not None]
+        return pd.DataFrame({"payload": pd.Series(payloads, dtype="object")})
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for item_id in pdf["id"]:
-                bo = FetchBackoff()
-                for attempt in range(retries):
-                    try:
-                        data = transport.get_item(int(item_id))
-                        break
-                    except Exception as exc:
-                        if not _is_retryable(exc) or attempt == retries - 1:
-                            raise
-                        delay = bo.next()
-                        time.sleep(delay if sleep_cap is None else min(delay, sleep_cap))
-                if data is not None:
-                    payloads.append(json.dumps(data))
-            yield pd.DataFrame({"payload": pd.Series(payloads, dtype="object")})
+        if threads <= 1:
+            for pdf in batches:
+                yield frame(map(fetch_one, pdf["id"]))
+            return
+        pool = ThreadPoolExecutor(threads, thread_name_prefix=FETCH_THREAD_PREFIX)
+        try:
+            for pdf in batches:
+                yield frame(pool.map(fetch_one, pdf["id"]))
+        finally:
+            pool.shutdown(wait=True, cancel_futures=True)
 
     return kernel
+
+
+def _fetch_plan(spark: SparkSession, parallelism: int, n_ids: int) -> tuple[int, int]:
+    """(tasks, threads per task) for ``parallelism`` requests in flight: no
+    more tasks than the cluster runs at once, nor than there are ids; the
+    rest of the fan-out runs as threads inside each task."""
+    parallelism = max(1, parallelism)
+    tasks = max(1, min(parallelism, spark.sparkContext.defaultParallelism, n_ids))
+    return tasks, -(-parallelism // tasks)
+
+
+def _fetch(ids: DataFrame, transport, retrieved_at, sleep_cap, threads: int = 1) -> DataFrame:
+    if retrieved_at is None:
+        retrieved_at = int(time.time())
+    kernel = _fetch_kernel(transport, sleep_cap=sleep_cap, threads=threads)
+    raw = ids.mapInPandas(kernel, "payload string")
+    return normalize_wire(parse_wire_json(raw), retrieved_at=retrieved_at)
 
 
 def fetch_items(
@@ -185,14 +225,14 @@ def fetch_items(
 ) -> DataFrame:
     """S3/S4/S5: fetch ids [lower, upper] -> normalized items DataFrame.
 
-    ``spark.range`` + ``repartition(parallelism)`` is the thread-count knob
-    (hnarchive.py:133-137); Arrow batch size plays the 250-item result
-    buffer (hnarchive.py:144)."""
-    if retrieved_at is None:
-        retrieved_at = int(time.time())
-    ids = spark.range(lower, upper + 1).toDF("id").repartition(parallelism)
-    raw = ids.mapInPandas(_fetch_kernel(transport, sleep_cap=sleep_cap), "payload string")
-    return normalize_wire(parse_wire_json(raw), retrieved_at=retrieved_at)
+    ``parallelism`` is the number of requests in flight, the reference's
+    thread count (hnarchive.py:133-137): ``spark.range`` builds the id
+    range directly in ``tasks`` partitions (no shuffle) and each task runs
+    ``threads`` fetches at a time.  Arrow batch size plays the 250-item
+    result buffer (hnarchive.py:144)."""
+    tasks, threads = _fetch_plan(spark, parallelism, upper - lower + 1)
+    ids = spark.range(lower, upper + 1, 1, tasks)
+    return _fetch(ids, transport, retrieved_at, sleep_cap, threads)
 
 
 def fetch_ids_df(
@@ -203,13 +243,10 @@ def fetch_ids_df(
 ) -> DataFrame:
     """Fetch the ids in a DataFrame column ``id`` — the distributed id-source
     shape (E4 staleness scan feeds this directly; no driver collect)."""
-    if retrieved_at is None:
-        retrieved_at = int(time.time())
     from pyspark.sql import functions as F
 
     ids = ids_df.select(F.col("id").cast("long").alias("id"))
-    raw = ids.mapInPandas(_fetch_kernel(transport, sleep_cap=sleep_cap), "payload string")
-    return normalize_wire(parse_wire_json(raw), retrieved_at=retrieved_at)
+    return _fetch(ids, transport, retrieved_at, sleep_cap)
 
 
 def fetch_id_list(
@@ -223,7 +260,6 @@ def fetch_id_list(
     """Fetch an explicit id set — the livestream shape, where the id source
     is a pending list, not a dense range.  Only the given ids are requested
     (a permanently skipped id is never fetched again)."""
-    ids_df = spark.createDataFrame([(int(i),) for i in ids], "id long").repartition(
-        max(1, min(parallelism, len(ids) or 1))
-    )
-    return fetch_ids_df(ids_df, transport, retrieved_at, sleep_cap=sleep_cap)
+    tasks, threads = _fetch_plan(spark, parallelism, len(ids))
+    ids_df = spark.createDataFrame([(int(i),) for i in ids], "id long").repartition(tasks)
+    return _fetch(ids_df, transport, retrieved_at, sleep_cap, threads)

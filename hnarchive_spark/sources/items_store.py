@@ -19,6 +19,14 @@ every other bucket is copied forward into the new snapshot as hardlinks —
 byte-identical files, O(1) I/O per file, the filesystem analog of a Delta
 manifest referencing unchanged data files.  A 200-id commit against a 25M-row
 store therefore rewrites ~1 bucket, not the store.
+
+Offset record: every commit writes the snapshot's max id into its own
+version dir (``_MAX_ID``; Spark's parquet reader skips ``_``-prefixed
+names) before the pointer swap, so ``latest_id`` reads one small file
+instead of scanning the store.  The value comes from jobs the commit runs
+anyway: the bucket-listing aggregate of a merge, or an ``Observation`` on
+the frame a full rewrite or delete writes.  A version written without the
+record (an older store) is scanned once, and the next commit adopts one.
 """
 
 from __future__ import annotations
@@ -27,7 +35,8 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.sql.types import LongType, StructField, StructType
@@ -36,6 +45,7 @@ from hnarchive_spark.operators.merge import merge_items
 from hnarchive_spark.schema import ITEMS_SCHEMA
 
 _BUCKET_COL = "id_bucket"
+_MAX_ID = "_MAX_ID"  # per-version committed max id (see module docstring)
 
 # Snapshot schema as written by _write_snapshot: the items columns plus the
 # id_bucket partition column (``type`` doubles as the second partition key
@@ -132,10 +142,11 @@ class ItemsStore:
         # Bucketed layouts (every snapshot this class writes) are read with
         # the schema PINNED: the store knows its own schema, so paying
         # parquet-footer inference on every commit is pure per-commit floor
-        # (measured ~84 ms/commit at sf0.1 — tools/merge_floor_probe.py,
-        # BENCH_NOTES r10).  Only a LEGACY un-bucketed dir (loose parquet
-        # files, no id_bucket= partitions) keeps inference, so the
-        # migration fallback in merge_batch still sees the true columns.
+        # (measured ~84 ms/commit at sf0.1, BENCH_NOTES r10; perfbench's
+        # traced items_store.merge_batch_s tracks the commit cost).  Only a
+        # LEGACY un-bucketed dir (loose parquet files, no id_bucket=
+        # partitions) keeps inference, so the migration fallback in
+        # merge_batch still sees the true columns.
         # A zero-row snapshot (no partition dirs at all — a store whose
         # first commit was an empty batch) also takes the pinned path:
         # inference would fail on it, the pinned read correctly returns
@@ -194,6 +205,32 @@ class ItemsStore:
                 except OSError:
                     shutil.copy2(s, t)
 
+    def _read_max_id(self, v: int) -> int | None:
+        try:
+            with open(os.path.join(self._version_dir(v), _MAX_ID)) as fh:
+                return int(fh.read().strip())
+        except (FileNotFoundError, ValueError):
+            return None
+
+    def _committed_max(self, v: int) -> int:
+        """Max id of snapshot ``v``: its record, or one scan for a version
+        written before records existed (0 for an empty snapshot)."""
+        m = self._read_max_id(v)
+        if m is None:
+            m = self._read_raw(v).agg(F.max("id").alias("m")).collect()[0]["m"]
+        return int(m or 0)
+
+    def _publish(self, new: int, max_id: int) -> None:
+        """Record ``max_id`` in version ``new``'s dir, then swap the pointer.
+        The record is replaced by rename, never rewritten in place: a
+        zero-row commit's dir holds a hardlink of the previous version's
+        record, and writing through it would change that version too."""
+        path = os.path.join(self._version_dir(new), _MAX_ID)
+        with open(path + ".tmp", "w") as fh:
+            fh.write(str(max_id))
+        os.replace(path + ".tmp", path)
+        self._swap_pointer(new)
+
     def _swap_pointer(self, new: int) -> None:
         self._write_meta()  # layout granularity travels with every snapshot
         tmp = self._pointer + ".tmp"
@@ -207,11 +244,21 @@ class ItemsStore:
                 shutil.rmtree(self._version_dir(v), ignore_errors=True)
 
     def _commit(self, df: DataFrame) -> None:
-        """K1 commit: write a full new version dir, fsync the pointer swap."""
+        """K1 commit: write a full new version dir, then swap the pointer by
+        atomic rename.  Process-crash safe, not power-loss safe: nothing is
+        fsynced.  The max-id record is observed on the write job itself."""
         old = self._current_version()
         new = (old or 0) + 1
-        self._write_snapshot(df, self._version_dir(new))
-        self._swap_pointer(new)
+        obs = Observation()
+        self._write_snapshot(df.observe(obs, F.max("id").alias("m")), self._version_dir(new))
+        try:
+            max_id = obs.get["m"] or 0
+        except Py4JJavaError:
+            # the optimizer removed the observed plan (a provably empty
+            # input, e.g. a first commit of an empty batch): scan what was
+            # written, which has no record yet
+            max_id = self._committed_max(new)
+        self._publish(new, max_id)
 
     # -- the reference's store API -------------------------------------------
 
@@ -265,12 +312,14 @@ class ItemsStore:
             updates.unpersist()
 
     def _merge_pruned(self, updates, item_cols, old_v, seq_col) -> None:
-        touched = sorted(
-            r[0]
-            for r in updates.select(
-                F.expr(f"id div {self.bucket_size}").alias("b")
-            ).distinct().collect()
+        # one job lists the touched buckets AND the batch's max id
+        buckets = (
+            updates.groupBy(F.expr(f"id div {self.bucket_size}").alias("b"))
+            .agg(F.max("id").alias("m"))
+            .collect()
         )
+        touched = sorted(r["b"] for r in buckets)
+        new_max = max([self._committed_max(old_v)] + [r["m"] for r in buckets])
         if not touched:
             # Zero-row batch (an idle livestream tick committing on cadence):
             # the merge is the identity, so skip the merge plan and the
@@ -278,12 +327,12 @@ class ItemsStore:
             # snapshot forward and swap. Drops the measured commit floor
             # from ~0.64 s to ~0.14 s (snapshot open, batch checkpoint and
             # bucket listing are still paid before this point; link+swap
-            # itself is ~0.01 s — tools/merge_floor_probe.py, BENCH_NOTES
-            # r10). Schema errors must still fail FAST on idle ticks — a
-            # misconfigured stream would otherwise commit versions happily
-            # until the first non-empty batch — so run the SAME analysis
-            # the real merge performs: build (never execute) the merge plan
-            # against a 0-row current.  Spark analyzes DataFrames eagerly,
+            # itself is ~0.01 s — BENCH_NOTES r10; perfbench's traced
+            # items_store.merge_batch_s tracks it now). Schema errors must
+            # still fail FAST on idle ticks — a misconfigured stream would
+            # otherwise commit versions happily until the first non-empty
+            # batch — so run the SAME analysis the real merge performs:
+            # build (never execute) the merge plan against a 0-row current.  Spark analyzes DataFrames eagerly,
             # so missing columns AND type mismatches the join/coalesce spec
             # would reject surface here, on the idle tick.
             if seq_col is not None and seq_col not in updates.columns:
@@ -307,8 +356,10 @@ class ItemsStore:
                 )
             new_v = old_v + 1
             out = self._version_dir(new_v)
+            # a dir left by a commit that crashed before its swap
+            shutil.rmtree(out, ignore_errors=True)
             self._link_forward(self._version_dir(old_v), out)
-            self._swap_pointer(new_v)
+            self._publish(new_v, new_max)
             return
         # read ONLY the touched bucket subtrees (basePath keeps the
         # partition columns): the driver lists O(touched) directories per
@@ -346,7 +397,7 @@ class ItemsStore:
             if int(name.split("=", 1)[1]) in touched_set:
                 continue
             self._link_forward(os.path.join(old_dir, name), os.path.join(out, name))
-        self._swap_pointer(new_v)
+        self._publish(new_v, new_max)
 
     def delete_ids(self, ids: list[int]) -> int:
         """Targeted hard delete (the right-to-be-forgotten path a training
@@ -367,20 +418,42 @@ class ItemsStore:
             return removed
         touched = sorted({int(i) // self.bucket_size for i in ids})
         current = raw.filter(F.col(_BUCKET_COL).isin(touched)).select(*item_cols)
-        kept = current.filter(~F.col("id").isin(ids)).localCheckpoint(eager=True)
-        removed = current.count() - kept.count()
+        # the checkpoint job also counts the kept rows and finds their max
+        obs = Observation()
+        kept = (
+            current.filter(~F.col("id").isin(ids))
+            .observe(obs, F.count(F.lit(1)).alias("n"), F.max("id").alias("m"))
+            .localCheckpoint(eager=True)
+        )
+        n_kept, kept_max = obs.get["n"], obs.get["m"]
+        removed = current.count() - n_kept
         if not removed:
             return 0
         new_v = old_v + 1
         out = self._version_dir(new_v)
         old_dir = self._version_dir(old_v)
         touched_set = set(touched)
-        untouched = [
-            n
+        untouched = sorted(
+            b
             for n in os.listdir(old_dir)
-            if n.startswith(f"{_BUCKET_COL}=") and int(n.split("=", 1)[1]) not in touched_set
-        ]
-        if kept.isEmpty() and not untouched:
+            if n.startswith(f"{_BUCKET_COL}=")
+            and (b := int(n.split("=", 1)[1])) not in touched_set
+        )
+        new_max = self._committed_max(old_v)
+        if new_max in {int(i) for i in ids}:
+            # the max was deleted: the new one is the kept max unless a
+            # whole untouched bucket lies above it (then that bucket's max)
+            new_max = kept_max or 0
+            if untouched and (kept_max is None or untouched[-1] > kept_max // self.bucket_size):
+                top = os.path.join(old_dir, f"{_BUCKET_COL}={untouched[-1]}")
+                new_max = (
+                    self.spark.read.schema(_RAW_SCHEMA)
+                    .option("basePath", old_dir)
+                    .parquet(top)
+                    .agg(F.max("id"))
+                    .collect()[0][0]
+                )
+        if n_kept == 0 and not untouched:
             # store emptied: a partitioned write of zero rows leaves an
             # unreadable dir (no files, no schema) — write one schema-ful
             # empty file instead
@@ -391,9 +464,10 @@ class ItemsStore:
             )
         else:
             self._write_snapshot(kept, out)
-            for name in untouched:
+            for b in untouched:
+                name = f"{_BUCKET_COL}={b}"
                 self._link_forward(os.path.join(old_dir, name), os.path.join(out, name))
-        self._swap_pointer(new_v)
+        self._publish(new_v, new_max)
         return removed
 
     def compact(self, bucket_size: int) -> None:
@@ -429,9 +503,10 @@ class ItemsStore:
         return n
 
     def latest_id(self) -> int:
-        """Q4 select_latest_id (offset recovery, hnarchive.py:285-290)."""
-        row = self.read().agg(F.max("id").alias("m")).collect()[0]
-        return int(row["m"]) if row["m"] is not None else 0
+        """Q4 select_latest_id (offset recovery, hnarchive.py:285-290): the
+        current version's max-id record, so no Spark job runs."""
+        v = self._current_version()
+        return 0 if v is None else self._committed_max(v)
 
     def count(self) -> int:
         return self.read().count()

@@ -337,25 +337,6 @@ def stream_index_text(
     return writer.start()
 
 
-def stream_index_ivfpq(
-    vec_stream: DataFrame,
-    index_path: str,
-    n_sub: int,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    available_now: bool = True,
-):
-    """Vector stream → per-micro-batch IVF-PQ index append (frozen
-    quantizers; recall drift is the scheduled rebuild's job)."""
-    writer = vec_stream.writeStream.foreachBatch(
-        maintain_ivfpq_index(index_path, n_sub, id_col, vec_col)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_vec_store(
     vec_stream: DataFrame,
     store_path: str,

@@ -155,30 +155,3 @@ def maintain_vector_ingest(
         return appended
 
     return _process
-
-
-def stream_vector_ingest(
-    vec_stream: DataFrame,
-    vec_store_path: str,
-    checkpoint_dir: str,
-    ivfpq_path: str | None = None,
-    n_sub: int | None = None,
-    semdedup_index_path: str | None = None,
-    t_e6: int | None = None,
-    max_pivots: int | None = None,
-    available_now: bool = True,
-):
-    """Vector stream → the composed gate-before-index ingest."""
-    writer = vec_stream.writeStream.foreachBatch(
-        maintain_vector_ingest(
-            vec_store_path,
-            ivfpq_path=ivfpq_path,
-            n_sub=n_sub,
-            semdedup_index_path=semdedup_index_path,
-            t_e6=t_e6,
-            max_pivots=max_pivots,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

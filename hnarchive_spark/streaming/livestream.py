@@ -3,8 +3,10 @@ points (SURVEY.md §2.7 E2/E3, §2.8) re-expressed as micro-batch loops over
 the Spark fetch pipeline.
 
 Offset model (hnarchive.py:162-195, 524-537):
-* committed offset  = MAX(id) in the store (recovered from data, no
-  separate checkpoint needed — the merge is idempotent);
+* committed offset  = MAX(id) of the store's current snapshot, read from
+  the max-id record each commit writes into its version dir before the
+  pointer swap (no scan, no separate checkpoint — the merge is
+  idempotent; a snapshot without a record is scanned once);
 * external offset   = the API's maxitem counter;
 * `update`          = drain the gap, repeat until fixpoint (the
   Trigger.AvailableNow analog);
@@ -76,6 +78,7 @@ def update(
 
     Returns the number of rounds executed. Each round is one Spark batch:
     range -> mapInPandas fetch -> normalize -> merge -> atomic commit.
+    ``parallelism`` is the number of fetches in flight (see ``fetch_items``).
     ``commit_period`` bounds the ids per commit (hnarchive.py:607-611) so a
     long catch-up makes durable progress; None = one commit per round.
     ``should_stop`` is polled after each chunk commit — the graceful-

@@ -111,9 +111,3 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # wall-clock identical cast: session TZ pinned to UTC above
         return raw.withColumn("ts", F.col("ts").cast("timestamp"))
     return raw
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views so spark.sql() queries can run."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
