@@ -161,7 +161,7 @@ def _fetch_kernel(
     exception after exhaustion fails the task -> fail-fast re-raise like
     hnarchive.py:145-146. API-nulls/absences yield no row (U2).
 
-    ``threads`` > 1 fetches each batch through a thread pool (the
+    Each batch is fetched through a pool of ``threads`` threads (the
     reference's hnarchive.py:139 executor), keeping the ids' order.  The
     first error cancels the fetches not yet started; the pool is shut down
     and its threads joined on every exit path, so none outlives the task.
@@ -183,10 +183,6 @@ def _fetch_kernel(
         return pd.DataFrame({"payload": pd.Series(payloads, dtype="object")})
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if threads <= 1:
-            for pdf in batches:
-                yield frame(map(fetch_one, pdf["id"]))
-            return
         pool = ThreadPoolExecutor(threads, thread_name_prefix=FETCH_THREAD_PREFIX)
         try:
             for pdf in batches:
@@ -261,5 +257,7 @@ def fetch_id_list(
     is a pending list, not a dense range.  Only the given ids are requested
     (a permanently skipped id is never fetched again)."""
     tasks, threads = _fetch_plan(spark, parallelism, len(ids))
-    ids_df = spark.createDataFrame([(int(i),) for i in ids], "id long").repartition(tasks)
+    # the list is parallelized into at most defaultParallelism partitions,
+    # so the narrow coalesce reaches ``tasks`` without a shuffle
+    ids_df = spark.createDataFrame([(int(i),) for i in ids], "id long").coalesce(tasks)
     return _fetch(ids_df, transport, retrieved_at, sleep_cap, threads)

@@ -418,14 +418,14 @@ class ItemsStore:
             return removed
         touched = sorted({int(i) // self.bucket_size for i in ids})
         current = raw.filter(F.col(_BUCKET_COL).isin(touched)).select(*item_cols)
-        # the checkpoint job also counts the kept rows and finds their max
+        # the checkpoint job also counts the kept rows
         obs = Observation()
         kept = (
             current.filter(~F.col("id").isin(ids))
-            .observe(obs, F.count(F.lit(1)).alias("n"), F.max("id").alias("m"))
+            .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        n_kept, kept_max = obs.get["n"], obs.get["m"]
+        n_kept = obs.get["n"]
         removed = current.count() - n_kept
         if not removed:
             return 0
@@ -433,26 +433,11 @@ class ItemsStore:
         out = self._version_dir(new_v)
         old_dir = self._version_dir(old_v)
         touched_set = set(touched)
-        untouched = sorted(
-            b
+        untouched = [
+            n
             for n in os.listdir(old_dir)
-            if n.startswith(f"{_BUCKET_COL}=")
-            and (b := int(n.split("=", 1)[1])) not in touched_set
-        )
-        new_max = self._committed_max(old_v)
-        if new_max in {int(i) for i in ids}:
-            # the max was deleted: the new one is the kept max unless a
-            # whole untouched bucket lies above it (then that bucket's max)
-            new_max = kept_max or 0
-            if untouched and (kept_max is None or untouched[-1] > kept_max // self.bucket_size):
-                top = os.path.join(old_dir, f"{_BUCKET_COL}={untouched[-1]}")
-                new_max = (
-                    self.spark.read.schema(_RAW_SCHEMA)
-                    .option("basePath", old_dir)
-                    .parquet(top)
-                    .agg(F.max("id"))
-                    .collect()[0][0]
-                )
+            if n.startswith(f"{_BUCKET_COL}=") and int(n.split("=", 1)[1]) not in touched_set
+        ]
         if n_kept == 0 and not untouched:
             # store emptied: a partitioned write of zero rows leaves an
             # unreadable dir (no files, no schema) — write one schema-ful
@@ -464,9 +449,12 @@ class ItemsStore:
             )
         else:
             self._write_snapshot(kept, out)
-            for b in untouched:
-                name = f"{_BUCKET_COL}={b}"
+            for name in untouched:
                 self._link_forward(os.path.join(old_dir, name), os.path.join(out, name))
+        new_max = self._committed_max(old_v)
+        if new_max in {int(i) for i in ids}:
+            # the max was deleted: scan the snapshot just written (no record yet)
+            new_max = self._committed_max(new_v)
         self._publish(new_v, new_max)
         return removed
 

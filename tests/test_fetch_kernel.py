@@ -73,14 +73,15 @@ def test_threaded_fetch_rows_equal_single_request_rows(spark):
 
 def test_fetch_plan_has_no_shuffle_and_at_most_default_parallelism_tasks(spark):
     dp = spark.sparkContext.defaultParallelism
-    df = fetch_items(spark, 1, 500, _transport(), 4 * dp, T0)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    lines = plan.splitlines()
-    top = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
-    bottom = next(i for i, ln in enumerate(lines) if "Range (" in ln)
-    assert top < bottom
-    assert not any("Exchange" in ln for ln in lines[top:bottom])
-    assert df.rdd.getNumPartitions() <= dp
+    ranged = fetch_items(spark, 1, 500, _transport(), 4 * dp, T0)
+    listed = fetch_id_list(spark, list(range(500, 0, -7)), _transport(), 4 * dp, T0)
+    for df, source in ((ranged, "Range ("), (listed, "Scan ExistingRDD")):
+        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+        top = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+        bottom = next(i for i, ln in enumerate(lines) if source in ln)
+        assert top < bottom
+        assert not any("Exchange" in ln for ln in lines[top:bottom])
+        assert df.rdd.getNumPartitions() <= dp
 
 
 def test_non_retryable_error_fails_fast_and_cancels_pending():
@@ -91,12 +92,6 @@ def test_non_retryable_error_fails_fast_and_cancels_pending():
     # the fetches in flight finish, the queued ones are cancelled
     assert len(t.calls) < 20
     assert not _fetch_threads()
-
-
-def test_non_retryable_error_fails_the_spark_fetch(spark):
-    dp = spark.sparkContext.defaultParallelism
-    with pytest.raises(Exception, match="404"):
-        fetch_items(spark, 1, 40, _slow_transport(fatal=3, delay=0), 4 * dp, T0).count()
 
 
 def test_no_kernel_thread_outlives_its_task(spark):

@@ -69,9 +69,11 @@ def test_fetch_fails_fast_on_non_retryable_http_error(spark):
             self.calls.append(item_id)
             raise _NotFound("HTTP 404")
 
-    t = _FatalTransport(items={}, max_id=1)
-    with pytest.raises(Exception):
-        fetch_items(spark, 1, 1, t, parallelism=1, retrieved_at=T0, sleep_cap=0.01).count()
+    t = _FatalTransport(items={}, max_id=40)
+    # one request at a time, and several threads in each of several tasks
+    for parallelism in (1, 4 * spark.sparkContext.defaultParallelism):
+        with pytest.raises(Exception, match="404"):
+            fetch_items(spark, 1, 40, t, parallelism, retrieved_at=T0, sleep_cap=0.01).count()
 
 
 def test_update_reaches_fixpoint_and_is_restartable(store):
