@@ -28,30 +28,13 @@ from pyspark.sql import functions as F
 
 from hnarchive_spark.operators.similarity import DIM, as_double, sq_dist as _sq_dist
 
-# Above this many centroids the literal-argmin expression is no longer a
-# sane plan (k x dim literals embedded in one projection); fall back to the
-# broadcast-join + window form.  Every registered codebook (KMEANS_K=8,
+# Above this many centroids the map-side argmin (a numpy pandas UDF that
+# closes over the k x dim centroid matrix) is no longer sane; fall back to
+# the broadcast-join + window form.  Every registered codebook (KMEANS_K=8,
 # PQ_K=8, IVF lists) is far below it; a production coarse quantizer that
 # outgrows this bound needs the join form anyway because its centroid
 # matrix stops being expression-sized.
 ARGMIN_LITERAL_MAX = 1024
-
-# Map-side argmin implementation (VERDICT r18 #4, guide §4.2): "arrow" is a
-# vectorized numpy argmin inside ONE pandas UDF per pass — same zero-Exchange
-# plan shape as the r18 literal fold, but the per-row cost is numpy instead
-# of an interpreted k x dim higher-order-function fold, and the PLAN no
-# longer carries k x dim literal trees (whose analysis/codegen was the
-# measured sf0.1 premium: plans/r19/, OPTIMIZATION_r19.md §argmin).
-# "fold" keeps the r18 literal array_min(transform(...)) form — retained for
-# the A/B probe (tools/argmin_arrow_probe.py) and as documentation of the
-# alternative; both produce BIT-IDENTICAL assignments (exactness contract in
-# _np_round6_e6/_np_argmin docstrings, equality-swept on all three SFs).
-# The env override exists ONLY for the A/B probe's separate-process timing
-# runs; production default is the measured winner.
-import os as _os
-
-ARGMIN_IMPL = _os.environ.get("SPARK_GRAFT_ARGMIN_IMPL", "arrow")
-
 
 def _np_round6_e6(acc):
     """numpy replica of Spark ``round(d, 6)`` scaled to int64 — the
@@ -93,7 +76,7 @@ def _np_round6_e6(acc):
 def _np_argmin(V, cents: list[tuple[int, list[float]]]):
     """list_id of the nearest centroid per row of ``V`` (n x dim float64).
 
-    Bit-identical to the literal-fold/join forms: the squared distance is
+    Bit-identical to the join form: the squared distance is
     accumulated PER DIMENSION across all rows (acc += (x_i-c_i)^2 — the
     exact IEEE-754 operation order of similarity.sq_dist's sequential
     zip_with/aggregate fold), rounded via :func:`_np_round6_e6`, and ties
@@ -159,35 +142,6 @@ def _cent_pairs(centroids) -> list[tuple[int, list[float]]]:
     return [(int(r[0]), [float(x) for x in r[1]]) for r in centroids]
 
 
-def _argmin_list_id(vec: F.Column, cents: list[tuple[int, list[float]]]) -> F.Column:
-    """MAP-SIDE nearest-centroid assignment: min over a literal
-    (dist, list_id) struct array — zero Exchange, zero row explosion
-    (guide §2.4: the crossJoin(k) + Window(vec_id) argmin shuffled n*k
-    vector-carrying rows per pass; this is a pure projection).
-
-    Scoring contract is IDENTICAL to the join form it replaces: dist =
-    round(sq_dist, 6) via the same sequential fold, and array_min over
-    struct<dist,list_id> is the same total order as the window's
-    ORDER BY dist, list_id (lexicographic struct comparison — equal
-    rounded doubles tie-break to the smaller list_id), so the argmin is
-    bit-for-bit the row_number()=1 row."""
-    cent_arr = F.array(*[
-        F.struct(
-            F.lit(lid).cast("long").alias("list_id"),
-            F.array(*[F.lit(x) for x in c]).alias("centroid"),
-        )
-        for lid, c in cents
-    ])
-    scored = F.transform(
-        cent_arr,
-        lambda s: F.struct(
-            F.round(_sq_dist(vec, s["centroid"]), 6).alias("dist"),
-            s["list_id"].alias("list_id"),
-        ),
-    )
-    return F.array_min(scored)["list_id"]
-
-
 def _assign_pass(e: DataFrame, cents: list[tuple[int, list[float]]], keep_vec: bool = True) -> DataFrame:
     """One nearest-centroid assignment pass over (vec_id, v) rows."""
     if not cents:
@@ -201,11 +155,7 @@ def _assign_pass(e: DataFrame, cents: list[tuple[int, list[float]]], keep_vec: b
         ).limit(0)
     if len(cents) <= ARGMIN_LITERAL_MAX:
         cols = ["vec_id", "v"] if keep_vec else ["vec_id"]
-        if ARGMIN_IMPL == "arrow":
-            return e.select(
-                *cols, _argmin_udf(cents)(F.col("v")).alias("list_id")
-            )
-        return e.select(*cols, _argmin_list_id(F.col("v"), cents).alias("list_id"))
+        return e.select(*cols, _argmin_udf(cents)(F.col("v")).alias("list_id"))
     # join fallback for expression-unfriendly centroid counts — the
     # previously verified broadcast-join + window form, same contract
     cent_df = e.sparkSession.createDataFrame(
@@ -348,7 +298,7 @@ def pq_assign(
     subvector slice (same k-smallest-ids init, 6-decimal rounded distances,
     list-id tiebreak, fixed iterations — the oracle replays exactly that),
     but ALL ``n_sub`` codebooks assign in ONE map-side corpus pass per
-    iteration: each subspace's argmin is a literal-codebook fold in the
+    iteration: every subspace's argmin runs in ONE numpy pandas UDF in the
     same projection (guide §2.4 — the previous explode-to-(vec_id, m) +
     broadcast-join + Window(vec_id, m) + final pivot shape shuffled
     n*n_sub*k scored rows per iteration plus a pivot aggregate; this
@@ -383,27 +333,17 @@ def pq_assign(
         by_m: dict[int, list[tuple[int, list[float]]]] = {}
         for m, lid, c in centroids:
             by_m.setdefault(int(m), []).append((int(lid), [float(x) for x in c]))
-        if ARGMIN_IMPL == "arrow":
-            # ONE pandas UDF computes all n_sub codes (one Python crossing
-            # per row); the array lands in an inner projection so the UDF
-            # evaluates once, the outer select just extracts elements
-            cu = _pq_codes_udf(by_m, sub, n_sub)
-            assign_wide = e.select(
-                "vec_id", "v", cu(F.col("v")).alias("_codes")
-            ).select(
-                "vec_id",
-                "v",
-                *[F.col("_codes")[m].alias(f"code_{m}") for m in range(n_sub)],
-            )
-        else:
-            assign_wide = e.select(
-                "vec_id",
-                "v",
-                *[
-                    _argmin_list_id(slice_m(m), by_m[m]).alias(f"code_{m}")
-                    for m in range(n_sub)
-                ],
-            )
+        # ONE pandas UDF computes all n_sub codes (one Python crossing
+        # per row); the array lands in an inner projection so the UDF
+        # evaluates once, the outer select just extracts elements
+        cu = _pq_codes_udf(by_m, sub, n_sub)
+        assign_wide = e.select(
+            "vec_id", "v", cu(F.col("v")).alias("_codes")
+        ).select(
+            "vec_id",
+            "v",
+            *[F.col("_codes")[m].alias(f"code_{m}") for m in range(n_sub)],
+        )
         if it < iters - 1:
             # centroid update: explode ONLY the (m, code, sub_v) triples the
             # aggregate needs — the corpus-wide argmin stays un-exploded

@@ -485,7 +485,10 @@ def _build_release(
         _url_pipeline_stages,
         funnel_from_stages,
     )
-    from hnarchive_spark.sources.index_version import publish_index_version
+    from hnarchive_spark.sources.index_version import (
+        publish_index_version,
+        write_json_atomic,
+    )
 
     d = load(spark, sf_dir, "documents")
 
@@ -823,10 +826,7 @@ def _build_release(
     # a manifest-bearing marked unpublished dir (likewise torn);
     # between publish and marker removal, a published dir with a stale
     # marker — harmless (heal and prune both skip the current version).
-    tmp = os.path.join(vdir, "_MANIFEST.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    os.replace(tmp, os.path.join(vdir, "_MANIFEST.json"))
+    write_json_atomic(os.path.join(vdir, "_MANIFEST.json"), manifest)
     # the publish: one atomic pointer swap, strictly AFTER the manifest
     # — a crash before this line leaves the old release current and this
     # attempt torn-detectable

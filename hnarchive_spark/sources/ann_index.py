@@ -32,6 +32,7 @@ from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
     publish_index_version,
+    write_json_atomic,
 )
 
 from hnarchive_spark.operators.similarity import (
@@ -569,10 +570,7 @@ def build_ivfpq_index(
         .write.mode("overwrite")
         .parquet(f"{path}/codebooks")
     )
-    tmp = os.path.join(path, "_META.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"by_residual": bool(by_residual)}, fh)
-    os.replace(tmp, os.path.join(path, "_META.json"))
+    write_json_atomic(os.path.join(path, "_META.json"), {"by_residual": bool(by_residual)})
 
 
 def _ivfpq_meta(path: str) -> dict:

@@ -40,7 +40,6 @@ exchange), and a semi-join into only the matching shingle buckets.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,6 +50,7 @@ from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
     publish_index_version,
+    retain,
 )
 
 N_SH_BUCKETS = 64
@@ -78,21 +78,16 @@ def _bloom_data_path(path: str) -> str:
 
 def _publish_bloom(bitmap: DataFrame, broot: str) -> None:
     """Write ``bitmap`` to ``<broot>/v<N+1>`` and atomically swap the
-    pointer.  Versions older than the immediately superseded one are
-    pruned (the bitmap is at most ``2^log2_bits/64`` rows, and keeping
-    exactly one back version protects a reader that resolved the
-    pointer just before the swap).  This inline prune is the module's
-    DOCUMENTED divergence from the index_version.py retain-until-
-    prune_index_versions contract (see that module's docstring): the
-    bitmap is republished per merge, so retain-until-pruned would grow a
-    version per append for a scalar-sized artifact."""
+    pointer, then ``retain`` one back version: the bitmap is republished
+    per merge, so retain-until-pruned would grow a version per append
+    for a scalar-sized artifact, and the one back version protects a
+    reader that resolved the pointer just before the swap."""
     new_v = (current_index_version(broot) or 0) + 1
     bitmap.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(broot, f"v{new_v}")
     )
     publish_index_version(broot, new_v)
-    for stale in range(1, new_v - 1):
-        shutil.rmtree(os.path.join(broot, f"v{stale}"), ignore_errors=True)
+    retain(broot, 1)
 
 
 def _tot_path(path: str) -> str:

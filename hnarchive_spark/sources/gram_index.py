@@ -50,6 +50,7 @@ from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
     publish_index_version,
+    write_json_atomic,
 )
 
 N_GRAM_BUCKETS = 64
@@ -113,11 +114,7 @@ def build_gram_index(
         .partitionBy("bucket")
         .parquet(path)
     )
-    os.makedirs(path, exist_ok=True)
-    tmp = _meta_path(path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"l": int(l)}, fh)
-    os.replace(tmp, _meta_path(path))
+    write_json_atomic(_meta_path(path), {"l": int(l)})
     return spark.read.parquet(index_root(path)).count()
 
 

@@ -1,35 +1,34 @@
-"""Atomic version pointers for persisted secondary indexes (ANN, text).
+"""The one publish primitive: every JSON record and version pointer in
+the package is written here.
 
-The persisted index families support O(batch) appends against FROZEN
-quantizers — at 100 TB that accrues two liabilities the judge's r10
-verdict names: recall degrades as the corpus drifts from the training
-sample, and every append drops more small files into each list/term
-partition.  The lifecycle answer is a periodic REBUILD (retrain +
-re-encode) or COMPACTION (rewrite partitions at full files), and both
-need a publish step that never breaks a concurrent reader.
+Versioned artifacts (the items store, the persisted indexes, the SCD2,
+vec and tokenizer stores, releases) write a complete new tree under
+``<path>/v<N>/`` and then publish it by replacing one small pointer
+record, ``<path>/_CURRENT``:
 
-This module is that publish step — the items store's ``_CURRENT``
-discipline (sources/items_store.py ``_commit``) applied to indexes:
+* the record is one JSON object, ``{"version": N, **meta}``.  Small
+  metadata that must change atomically with the version rides in the
+  same record (the items store's ``bucket_size`` and ``max_id``), so one
+  rename commits the version and everything that describes it;
+* a reader that resolved the root before the swap keeps a complete,
+  immutable tree, and one that resolves after it sees the new version
+  in full;
+* the items store's older pointer was a bare int (``"7"``);
+  :func:`read_index_record` still reads it as ``{"version": 7}``;
+* a freshly built index is FLAT (``<path>/codes``, ...) until its first
+  versioned rebuild, and :func:`index_root` resolves either layout;
+* old versions are retained until :func:`prune_index_versions`, or
+  trimmed to a window by :func:`retain` (the items store's snapshot
+  window, the contamination gate's single back version of its Bloom
+  bitmap).
 
-* a freshly built index is FLAT (``<path>/codes``, ``<path>/postings``,
-  ...) — nothing changes for the common case;
-* a rebuild/compaction writes a complete new tree under ``<path>/v<N>/``
-  and then publishes it by ``os.replace``-ing the tiny ``_CURRENT``
-  pointer — the only mutation the live tree ever sees is one atomic
-  rename, so a reader that resolved the root before the swap keeps a
-  complete, immutable index, and one that resolves after it sees the
-  new version in full;
-* old versions are retained until :func:`prune_index_versions` — the
-  same time-travel-until-pruned model as the store.
+Every other JSON sidecar (per-version ``_META.json``, ledgers, journals,
+manifests) goes through :func:`write_json_atomic`: a tmp file, then one
+``os.replace``.
 
-ONE documented divergence (ADVICE r14): the contamination index's Bloom
-bitmap (contamination_index._publish_bloom) prunes its own superseded
-versions INLINE at publish time, keeping exactly one back version — the
-bitmap is scalar-sized, republished on every merge, and would otherwise
-accumulate a version per append; a reader more than one merge stale can
-have its bloom directory deleted mid-scan there (it falls back to a
-re-resolve).  Every OTHER family follows the retain-until-pruned
-contract above.
+Durability: process-crash safe, not power-loss safe: nothing is fsynced.
+A killed process leaves either the old record or the new one, never a
+torn one; a power loss may lose a rename the OS had not yet flushed.
 """
 
 from __future__ import annotations
@@ -41,13 +40,39 @@ import shutil
 _POINTER = "_CURRENT"
 
 
+def write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` by a tmp file and one rename."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
+def read_json(path: str, default=None):
+    """The JSON value at ``path``, or ``default`` if the file is absent."""
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return default
+
+
+def read_index_record(path: str) -> dict | None:
+    """The published pointer record, or None while nothing is published.
+    A legacy bare-int pointer reads as ``{"version": N}``."""
+    rec = read_json(os.path.join(path, _POINTER))
+    if rec is None:
+        return None
+    if not isinstance(rec, dict):
+        rec = {"version": rec}
+    return {**rec, "version": int(rec["version"])}
+
+
 def current_index_version(path: str) -> int | None:
     """The published version number, or None while the index is flat."""
-    try:
-        with open(os.path.join(path, _POINTER)) as fh:
-            return int(json.load(fh)["version"])
-    except FileNotFoundError:
-        return None
+    rec = read_index_record(path)
+    return None if rec is None else rec["version"]
 
 
 def index_root(path: str) -> str:
@@ -59,16 +84,36 @@ def index_root(path: str) -> str:
     return path if v is None else os.path.join(path, f"v{v}")
 
 
-def publish_index_version(path: str, version: int) -> None:
-    """Atomically point ``<path>/_CURRENT`` at ``v<version>``."""
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, _POINTER + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"version": int(version)}, fh)
-    os.replace(tmp, os.path.join(path, _POINTER))
+def publish_index_version(path: str, version: int, meta: dict | None = None) -> None:
+    """Atomically point ``<path>/_CURRENT`` at version ``version``,
+    carrying ``meta`` in the same record."""
+    write_json_atomic(
+        os.path.join(path, _POINTER), {"version": int(version), **(meta or {})}
+    )
 
 
-def prune_index_versions(path: str, keep_current_only: bool = True) -> list[str]:
+def _version_number(name: str) -> int | None:
+    return int(name[1:]) if name.startswith("v") and name[1:].isdigit() else None
+
+
+def retain(path: str, keep: int) -> list[str]:
+    """Delete the ``v<digits>`` dirs older than the current version minus
+    ``keep``; returns the removed paths.  Newer dirs (an unpublished
+    commit) are left for the next writer, which reuses their number."""
+    cur = current_index_version(path)
+    if cur is None:
+        return []
+    removed = []
+    for name in sorted(os.listdir(path)):
+        n = _version_number(name)
+        if n is not None and n < cur - keep:
+            full = os.path.join(path, name)
+            shutil.rmtree(full, ignore_errors=True)
+            removed.append(full)
+    return removed
+
+
+def prune_index_versions(path: str) -> list[str]:
     """Delete version directories other than the published one (and any
     leftover flat-layout data dirs once a versioned root is live).
     Returns the removed paths.  Callers run this only once no reader can
@@ -78,24 +123,26 @@ def prune_index_versions(path: str, keep_current_only: bool = True) -> list[str]
     if cur is None:
         return []
     removed = []
-    keep = f"v{cur}"
     for name in sorted(os.listdir(path)):
         full = os.path.join(path, name)
-        if name == keep or name.startswith(_POINTER) or not os.path.isdir(full):
+        if not os.path.isdir(full):
             continue
-        if name.startswith("v") and name[1:].isdigit() and not keep_current_only:
-            continue
-        if name.startswith("v") and name[1:].isdigit():
+        n = _version_number(name)
+        if n is not None and n != cur:
             shutil.rmtree(full)
             removed.append(full)
-        elif name in (
-            "codes", "lists", "centroids", "codebooks", "postings",
-            # MinHash index (bands/docs), contamination gate (ev/bloom/tot),
-            # SCD2 store (runs), ingest doc store (docs/urls), raw-vector
-            # store (vectors) — all publish rebuilds into v<N>, leaving
-            # their flat pre-versioning trees superseded
-            "bands", "docs", "ev", "bloom", "tot", "runs", "urls", "vectors",
-        ) or name.startswith("bucket="):
+        elif n is None and (
+            name in (
+                "codes", "lists", "centroids", "codebooks", "postings",
+                # MinHash index (bands/docs), contamination gate
+                # (ev/bloom/tot), SCD2 store (runs), ingest doc store
+                # (docs/urls), raw-vector store (vectors) — all publish
+                # rebuilds into v<N>, leaving their flat pre-versioning
+                # trees superseded
+                "bands", "docs", "ev", "bloom", "tot", "runs", "urls", "vectors",
+            )
+            or name.startswith("bucket=")
+        ):
             # pre-versioning flat data superseded by the published version
             # (bucket=* is the LSH index's flat layout — its partitions
             # live directly at the root, not under a named data dir)

@@ -20,18 +20,20 @@ byte-identical files, O(1) I/O per file, the filesystem analog of a Delta
 manifest referencing unchanged data files.  A 200-id commit against a 25M-row
 store therefore rewrites ~1 bucket, not the store.
 
-Offset record: every commit writes the snapshot's max id into its own
-version dir (``_MAX_ID``; Spark's parquet reader skips ``_``-prefixed
-names) before the pointer swap, so ``latest_id`` reads one small file
-instead of scanning the store.  The value comes from jobs the commit runs
-anyway: the bucket-listing aggregate of a merge, or an ``Observation`` on
-the frame a full rewrite or delete writes.  A version written without the
-record (an older store) is scanned once, and the next commit adopts one.
+Commit record: the ``_CURRENT`` pointer is the one record a commit
+writes (sources/index_version.py), and it carries the snapshot's
+``bucket_size`` and ``max_id`` next to its version — so a commit is one
+rename, and the granularity and offset a reader sees always belong to
+the snapshot it resolves.  ``latest_id`` reads ``max_id`` instead of
+scanning the store.  The value comes from jobs the commit runs anyway:
+the bucket-listing aggregate of a merge, or an ``Observation`` on the
+frame a full rewrite or delete writes.  A store whose record has no
+``max_id`` (an older store: a bare-int pointer, per-version ``_MAX_ID``
+files) is scanned once, and the next commit records it.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -43,9 +45,15 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from hnarchive_spark.operators.merge import merge_items
 from hnarchive_spark.schema import ITEMS_SCHEMA
+from hnarchive_spark.sources.index_version import (
+    current_index_version,
+    publish_index_version,
+    read_index_record,
+    read_json,
+    retain,
+)
 
 _BUCKET_COL = "id_bucket"
-_MAX_ID = "_MAX_ID"  # per-version committed max id (see module docstring)
 
 # Snapshot schema as written by _write_snapshot: the items columns plus the
 # id_bucket partition column (``type`` doubles as the second partition key
@@ -69,51 +77,24 @@ class ItemsStore:
         # snapshots retained beyond the current one (cheap time travel /
         # safe rollback window — the parquet analog of Delta VACUUM policy)
         self.keep_versions = max(0, keep_versions)
+        os.makedirs(path, exist_ok=True)
         # merge/prune granularity: ids per bucket.  100k buckets a 25M-row
         # store into 250 partitions; a 200-id commit touches 1-2 of them.
-        self.bucket_size = max(1, bucket_size)
-        os.makedirs(path, exist_ok=True)
-        # Layout metadata is PERSISTED and wins over the constructor arg:
+        # The granularity is PERSISTED and wins over the constructor arg:
         # the on-disk id_bucket dirs encode one specific granularity, and a
         # reopen with a different bucket_size would misprune merges (touched
         # buckets computed at the new size, copy-forward listed at the old).
-        # The constructor arg only seeds a brand-new store (or a legacy one
-        # from before metadata existed — adopted on its next pointer swap).
-        persisted = self._read_meta()
-        if persisted is not None:
-            self.bucket_size = persisted
-
-    # -- layout metadata -----------------------------------------------------
-
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "_META.json")
-
-    def _read_meta(self) -> int | None:
-        try:
-            with open(self._meta_path) as fh:
-                return int(json.load(fh)["bucket_size"])
-        except (FileNotFoundError, KeyError, ValueError):
-            return None
-
-    def _write_meta(self) -> None:
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"bucket_size": self.bucket_size}, fh)
-        os.replace(tmp, self._meta_path)
+        # Read order: the commit record, then the root _META.json an older
+        # store wrote, then the constructor arg (a brand-new store).
+        persisted = (read_index_record(path) or {}).get("bucket_size") or read_json(
+            os.path.join(path, "_META.json"), {}
+        ).get("bucket_size")
+        self.bucket_size = max(1, int(persisted or bucket_size))
 
     # -- snapshot management -------------------------------------------------
 
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "_CURRENT")
-
     def _current_version(self) -> int | None:
-        try:
-            with open(self._pointer) as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
+        return current_index_version(self.path)
 
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.path, f"v{v:06d}")
@@ -205,48 +186,29 @@ class ItemsStore:
                 except OSError:
                     shutil.copy2(s, t)
 
-    def _read_max_id(self, v: int) -> int | None:
-        try:
-            with open(os.path.join(self._version_dir(v), _MAX_ID)) as fh:
-                return int(fh.read().strip())
-        except (FileNotFoundError, ValueError):
-            return None
-
     def _committed_max(self, v: int) -> int:
-        """Max id of snapshot ``v``: its record, or one scan for a version
-        written before records existed (0 for an empty snapshot)."""
-        m = self._read_max_id(v)
-        if m is None:
-            m = self._read_raw(v).agg(F.max("id").alias("m")).collect()[0]["m"]
+        """Max id of snapshot ``v``: the commit record's when ``v`` is the
+        published version, else one scan (a record written before max ids
+        were recorded, or a version not yet published; 0 when empty)."""
+        rec = read_index_record(self.path) or {}
+        if rec.get("version") == v and "max_id" in rec:
+            return int(rec["max_id"])
+        m = self._read_raw(v).agg(F.max("id").alias("m")).collect()[0]["m"]
         return int(m or 0)
 
     def _publish(self, new: int, max_id: int) -> None:
-        """Record ``max_id`` in version ``new``'s dir, then swap the pointer.
-        The record is replaced by rename, never rewritten in place: a
-        zero-row commit's dir holds a hardlink of the previous version's
-        record, and writing through it would change that version too."""
-        path = os.path.join(self._version_dir(new), _MAX_ID)
-        with open(path + ".tmp", "w") as fh:
-            fh.write(str(max_id))
-        os.replace(path + ".tmp", path)
-        self._swap_pointer(new)
-
-    def _swap_pointer(self, new: int) -> None:
-        self._write_meta()  # layout granularity travels with every snapshot
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(new))
-        os.replace(tmp, self._pointer)
-        # vacuum: drop snapshots older than the retention window (hardlinked
-        # files shared with newer snapshots survive the unlink)
-        for v in self.versions():
-            if v < new - self.keep_versions:
-                shutil.rmtree(self._version_dir(v), ignore_errors=True)
+        """The commit: one record names version ``new``, its granularity
+        and its max id.  Then vacuum snapshots older than the retention
+        window (hardlinked files shared with newer snapshots survive)."""
+        publish_index_version(
+            self.path, new, {"bucket_size": self.bucket_size, "max_id": int(max_id)}
+        )
+        retain(self.path, self.keep_versions)
 
     def _commit(self, df: DataFrame) -> None:
-        """K1 commit: write a full new version dir, then swap the pointer by
-        atomic rename.  Process-crash safe, not power-loss safe: nothing is
-        fsynced.  The max-id record is observed on the write job itself."""
+        """K1 commit: write a full new version dir, then publish it by one
+        atomic rename (durability: see sources/index_version.py).  The max
+        id is observed on the write job itself."""
         old = self._current_version()
         new = (old or 0) + 1
         obs = Observation()
@@ -471,14 +433,19 @@ class ItemsStore:
         the fact.  The rewrite is one full pass (expensive by design, run it
         rarely); it commits as a normal versioned snapshot, so readers never
         see a half-compacted store and time travel across the compaction
-        keeps working.  The new granularity is persisted in _META.json with
-        the same commit, keeping future merge pruning consistent."""
+        keeps working.  The new granularity is recorded in the same commit
+        record as the snapshot it describes, so a crash before that rename
+        leaves both the old snapshot and the old granularity."""
         if bucket_size < 1:
             raise ValueError("bucket_size must be >= 1")
         item_cols = [f.name for f in ITEMS_SCHEMA.fields]
         current = self.read().select(*item_cols).localCheckpoint(eager=True)
-        self.bucket_size = bucket_size
-        self._commit(current)
+        old, self.bucket_size = self.bucket_size, bucket_size
+        try:
+            self._commit(current)
+        except BaseException:
+            self.bucket_size = old
+            raise
 
     def leaf_file_count(self, version: int | None = None) -> int:
         """Number of parquet data files in a snapshot (compaction metric)."""
@@ -492,7 +459,7 @@ class ItemsStore:
 
     def latest_id(self) -> int:
         """Q4 select_latest_id (offset recovery, hnarchive.py:285-290): the
-        current version's max-id record, so no Spark job runs."""
+        commit record's max id, so no Spark job runs."""
         v = self._current_version()
         return 0 if v is None else self._committed_max(v)
 

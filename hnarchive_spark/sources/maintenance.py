@@ -41,6 +41,7 @@ from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
     prune_index_versions,
+    write_json_atomic,
 )
 
 # Sidecar recording a tokenizer extend that FAILED to clear the
@@ -64,17 +65,14 @@ def _load_extend_audit(path: str) -> dict | None:
 
 
 def _record_extend_audit(path: str, coverage_e6: int, floor_e6: int) -> None:
-    tmp = os.path.join(path, _EXTEND_AUDIT + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "version": current_index_version(path),
-                "coverage_e6": int(coverage_e6),
-                "min_coverage_e6": int(floor_e6),
-            },
-            fh,
-        )
-    os.replace(tmp, os.path.join(path, _EXTEND_AUDIT))
+    write_json_atomic(
+        os.path.join(path, _EXTEND_AUDIT),
+        {
+            "version": current_index_version(path),
+            "coverage_e6": int(coverage_e6),
+            "min_coverage_e6": int(floor_e6),
+        },
+    )
 
 
 def _clear_extend_audit(path: str) -> None:

@@ -43,6 +43,7 @@ from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
     publish_index_version,
+    write_json_atomic,
 )
 
 
@@ -91,12 +92,10 @@ def publish_quality_model(
     model.select(
         F.col("bucket").cast("long"), F.col("w_e4").cast("long")
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(vdir, "weights"))
-    tmp = os.path.join(vdir, "_META.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"n_buckets": int(n_buckets), "n_weights": int(stats["n"])}, fh
-        )
-    os.replace(tmp, os.path.join(vdir, "_META.json"))
+    write_json_atomic(
+        os.path.join(vdir, "_META.json"),
+        {"n_buckets": int(n_buckets), "n_weights": int(stats["n"])},
+    )
     publish_index_version(path, new_v)
     return vdir
 

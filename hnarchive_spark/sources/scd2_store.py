@@ -33,6 +33,7 @@ from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
     publish_index_version,
+    write_json_atomic,
 )
 
 N_BUCKETS = 32
@@ -47,10 +48,7 @@ def _runs_path(path: str) -> str:
 
 
 def _write_meta(root: str, n_buckets: int) -> None:
-    import json
-
-    with open(os.path.join(root, "_META.json"), "w") as fh:
-        json.dump({"n_buckets": int(n_buckets)}, fh)
+    write_json_atomic(os.path.join(root, "_META.json"), {"n_buckets": int(n_buckets)})
 
 
 def _n_buckets(path: str) -> int:

@@ -47,6 +47,7 @@ from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
     publish_index_version,
+    write_json_atomic,
 )
 
 
@@ -59,11 +60,7 @@ def _lists_path(path: str) -> str:
 
 
 def _write_meta(root: str, k: int, iters: int) -> None:
-    os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, "_META.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"k": int(k), "iters": int(iters)}, fh)
-    os.replace(tmp, os.path.join(root, "_META.json"))
+    write_json_atomic(os.path.join(root, "_META.json"), {"k": int(k), "iters": int(iters)})
 
 
 def read_meta(path: str) -> dict:

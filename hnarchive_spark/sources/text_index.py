@@ -38,6 +38,7 @@ from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
     publish_index_version,
+    write_json_atomic,
 )
 
 N_TERM_BUCKETS = 64
@@ -86,14 +87,10 @@ def _stats(toks: DataFrame) -> tuple[int, int, int]:
 
 
 def _write_stats(path: str, s: int, n: int, np: int) -> None:
-    """Atomic stats publish: tiny JSON + os.replace — the same pointer
-    discipline the items store's `_CURRENT` uses, so a crash mid-update
-    never leaves a readable index with missing or half-written stats."""
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, "_STATS.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"s": s, "n": n, "np": np}, fh)
-    os.replace(tmp, os.path.join(path, "_STATS.json"))
+    """Atomic stats publish (index_version.write_json_atomic), so a crash
+    mid-update never leaves a readable index with missing or half-written
+    stats."""
+    write_json_atomic(os.path.join(path, "_STATS.json"), {"s": s, "n": n, "np": np})
 
 
 def _read_stats_full(path: str) -> tuple[int, int, int]:
@@ -128,10 +125,9 @@ def _write_journal(path: str, s_add: int, n_add: int, np_add: int) -> None:
     without guessing.  ``np_add`` is the batch's postings-visible doc
     count (docs with at least one token) — what recovery's re-derivation
     from postings can actually observe."""
-    tmp = _journal_path(path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"s_add": s_add, "n_add": n_add, "np_add": np_add}, fh)
-    os.replace(tmp, _journal_path(path))
+    write_json_atomic(
+        _journal_path(path), {"s_add": s_add, "n_add": n_add, "np_add": np_add}
+    )
 
 
 def recover_text_index(spark, path: str) -> str:

@@ -34,6 +34,7 @@ from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
     publish_index_version,
+    write_json_atomic,
 )
 
 
@@ -54,21 +55,17 @@ def _publish_rules(
     on (:func:`tokenizer_coverage`, VERDICT r16 #5)."""
     new_v = (current_index_version(path) or 0) + 1
     vdir = os.path.join(path, f"v{new_v}")
-    os.makedirs(vdir, exist_ok=True)
-    tmp = os.path.join(vdir, "_RULES.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "rounds": len(rules),
-                "rules": [
-                    {"merge_round": k, "left": a, "right": b, "n_occurrences": n}
-                    for k, a, b, n in rules
-                ],
-                **({} if vocab is None else {"vocab": dict(sorted(vocab.items()))}),
-            },
-            fh,
-        )
-    os.replace(tmp, os.path.join(vdir, "_RULES.json"))
+    write_json_atomic(
+        os.path.join(vdir, "_RULES.json"),
+        {
+            "rounds": len(rules),
+            "rules": [
+                {"merge_round": k, "left": a, "right": b, "n_occurrences": n}
+                for k, a, b, n in rules
+            ],
+            **({} if vocab is None else {"vocab": dict(sorted(vocab.items()))}),
+        },
+    )
     publish_index_version(path, new_v)
     return vdir
 

@@ -40,6 +40,7 @@ from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
     publish_index_version,
+    write_json_atomic,
 )
 
 DEFAULT_VEC_BUCKETS = 64
@@ -92,10 +93,10 @@ def build_vec_store(
         .partitionBy("bucket")
         .parquet(os.path.join(vdir, "vectors"))
     )
-    tmp = os.path.join(vdir, "_META.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"n_buckets": int(n_buckets), "n_vectors": int(stats["n"])}, fh)
-    os.replace(tmp, os.path.join(vdir, "_META.json"))
+    write_json_atomic(
+        os.path.join(vdir, "_META.json"),
+        {"n_buckets": int(n_buckets), "n_vectors": int(stats["n"])},
+    )
     publish_index_version(path, new_v)
     return vdir
 
@@ -191,10 +192,10 @@ def compact_vec_store(spark: SparkSession, path: str) -> str:
         .partitionBy("bucket")
         .parquet(os.path.join(vdir, "vectors"))
     )
-    tmp = os.path.join(vdir, "_META.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"n_buckets": int(meta["n_buckets"]), "n_vectors": int(n)}, fh)
-    os.replace(tmp, os.path.join(vdir, "_META.json"))
+    write_json_atomic(
+        os.path.join(vdir, "_META.json"),
+        {"n_buckets": int(meta["n_buckets"]), "n_vectors": int(n)},
+    )
     publish_index_version(path, new_v)
     return vdir
 

@@ -43,7 +43,6 @@ lifecycle verb now" decision.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
@@ -53,6 +52,7 @@ from hnarchive_spark.sources.ann_index import (
     append_ivfpq_index,
     append_lsh_index,
 )
+from hnarchive_spark.sources.index_version import read_json, write_json_atomic
 from hnarchive_spark.sources.text_index import (
     append_text_index,
     needs_recovery,
@@ -62,6 +62,27 @@ from hnarchive_spark.sources.text_index import (
 _MAINT_STATS = "_MAINT_STATS.json"
 
 
+def _bump(ledger_path: str, high: dict[str, int] | None = None, **deltas: int) -> None:
+    """Accumulate counts into the ``_MAINT_STATS`` ledger at
+    ``ledger_path``: each ``deltas`` key is summed, each ``high`` key keeps
+    its maximum.  One read-modify-write, published atomically.
+
+    SINGLE WRITER PER PATH (ADVICE r14): the read-modify-write is not
+    locked — the 'overstating, never understating' contract of every
+    ledger holds only while at most one stream targets a given ledger
+    path at a time (the repo's composition, enforced by giving each
+    stream its own checkpoint+ledger pair).  Two concurrent writers on
+    ONE path could lose (understate) each other's bumps; compose
+    concurrent sinks on separate paths and sum at read time."""
+    p = os.path.join(ledger_path, _MAINT_STATS)
+    d = read_json(p, {})
+    for k, v in deltas.items():
+        d[k] = d.get(k, 0) + int(v)
+    for k, v in (high or {}).items():
+        d[k] = max(d.get(k, 0), int(v))
+    write_json_atomic(p, d)
+
+
 def _bump_maint_stats(index_path: str, appended: int, skipped: int) -> None:
     """Accumulate the per-batch maintenance counts into a sidecar at the
     index root — ``writeStream.foreachBatch`` DISCARDS the maintenance
@@ -69,22 +90,10 @@ def _bump_maint_stats(index_path: str, appended: int, skipped: int) -> None:
     (= updates an append-only index is deferring to the next
     rebuild/compaction) would be unobservable exactly where it matters.
     Single-writer by construction (one streaming query per index, batches
-    sequential), atomic publish; ADVISORY numbers — an at-least-once
-    re-delivered batch bumps ``skipped`` again, which overstates but
-    never understates the pending-update volume."""
-    p = os.path.join(index_path, _MAINT_STATS)
-    try:
-        with open(p) as fh:
-            d = json.load(fh)
-    except FileNotFoundError:
-        d = {"appended": 0, "skipped": 0, "batches": 0}
-    d["appended"] += int(appended)
-    d["skipped"] += int(skipped)
-    d["batches"] += 1
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(d, fh)
-    os.replace(tmp, p)
+    sequential); ADVISORY numbers — an at-least-once re-delivered batch
+    bumps ``skipped`` again, which overstates but never understates the
+    pending-update volume."""
+    _bump(index_path, appended=appended, skipped=skipped, batches=1)
 
 
 def maintenance_stats(index_path: str, reset: bool = False) -> dict:
@@ -93,11 +102,7 @@ def maintenance_stats(index_path: str, reset: bool = False) -> dict:
     operator move after SCHEDULING the rebuild/compaction the counts
     argued for, so the next window accumulates fresh."""
     p = os.path.join(index_path, _MAINT_STATS)
-    try:
-        with open(p) as fh:
-            d = json.load(fh)
-    except FileNotFoundError:
-        d = {}
+    d = read_json(p, {})
     # a ledger created by the read-only gate has only gate_* keys (and
     # vice versa) — readers always see the append-triple defaulted
     d = {"appended": 0, "skipped": 0, "batches": 0, **d}
@@ -360,28 +365,11 @@ def _bump_gate_stats(index_path: str, flagged: int, max_e4: int) -> None:
     sidecar the append families use (gate-specific keys, so one ledger
     read surfaces both maintenance debt and leakage alerts).  Advisory
     like the append counts: an at-least-once re-delivered batch re-probes
-    and bumps again — overstating, never understating, the alert volume.
-
-    SINGLE WRITER PER PATH (ADVICE r14): this read-modify-write is not
-    locked — the 'overstating, never understating' contract holds only
-    while at most one gate stream targets a given ledger path at a time
-    (the repo's composition, enforced by giving each stream its own
-    checkpoint+ledger pair).  Two concurrent writers on ONE path could
-    lose (understate) each other's bumps; compose concurrent sinks on
-    separate paths and sum at read time."""
-    p = os.path.join(index_path, _MAINT_STATS)
-    try:
-        with open(p) as fh:
-            d = json.load(fh)
-    except FileNotFoundError:
-        d = {}
-    d["gate_batches"] = d.get("gate_batches", 0) + 1
-    d["gate_flagged"] = d.get("gate_flagged", 0) + int(flagged)
-    d["gate_max_e4"] = max(d.get("gate_max_e4", 0), int(max_e4))
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(d, fh)
-    os.replace(tmp, p)
+    and bumps again — overstating, never understating, the alert volume
+    (single writer per path, see :func:`_bump`)."""
+    _bump(
+        index_path, high={"gate_max_e4": max_e4}, gate_batches=1, gate_flagged=flagged
+    )
 
 
 def maintain_contamination_gate(
@@ -512,23 +500,13 @@ def maintain_quality_gate(
             ).alias("rejected"),
         ).collect()[0]
         rejected = int(row["rejected"] or 0)
-        p = os.path.join(ledger_path, _MAINT_STATS)
-        try:
-            with open(p) as fh:
-                d = json.load(fh)
-        except FileNotFoundError:
-            d = {}
-        d["quality_batches"] = d.get("quality_batches", 0) + 1
-        d["quality_scored"] = d.get("quality_scored", 0) + int(row["n"])
-        d["quality_rejected"] = d.get("quality_rejected", 0) + rejected
-        d["quality_unscored"] = d.get("quality_unscored", 0) + max(
-            0, int(n_batch) - int(row["n"])
+        _bump(
+            ledger_path,
+            quality_batches=1,
+            quality_scored=row["n"],
+            quality_rejected=rejected,
+            quality_unscored=max(0, int(n_batch) - int(row["n"])),
         )
-        os.makedirs(ledger_path, exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(d, fh)
-        os.replace(tmp, p)
         return rejected
 
     return _process

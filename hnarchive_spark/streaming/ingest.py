@@ -57,13 +57,12 @@ broadcast, and the store/index appends land in bucket partitions.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hnarchive_spark.streaming.index_maint import _MAINT_STATS
+from hnarchive_spark.streaming.index_maint import _bump
 
 # doc-store bucket count: matches the minhash docs-table discipline so
 # presence checks prune to the batch's own buckets
@@ -96,25 +95,6 @@ def read_ingested_docs(spark, store_path: str) -> DataFrame:
     return spark.read.parquet(_store_docs_path(store_path)).select(
         "doc_id", "text"
     )
-
-
-def _bump(ledger_path: str, **deltas: int) -> None:
-    """Accumulate per-stage counts into the _MAINT_STATS sidecar.
-    Single-writer-per-path, like every gate ledger (see
-    index_maint._bump_gate_stats)."""
-    os.makedirs(ledger_path, exist_ok=True)
-    p = os.path.join(ledger_path, _MAINT_STATS)
-    try:
-        with open(p) as fh:
-            d = json.load(fh)
-    except FileNotFoundError:
-        d = {}
-    for k, v in deltas.items():
-        d[k] = d.get(k, 0) + int(v)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(d, fh)
-    os.replace(tmp, p)
 
 
 def maintain_ingest(

@@ -54,7 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hnarchive_spark.streaming.ingest import _bump
+from hnarchive_spark.streaming.index_maint import _bump
 
 
 def maintain_vector_ingest(

@@ -57,3 +57,45 @@ def test_kmeans_feeds_ivf_index_build(spark, tmp_path):
     for q in (0, 1, 2):
         ranks = sorted(r["rank"] for r in rows if r["query_id"] == q)
         assert ranks == [1, 2, 3, 4, 5]
+
+
+def test_map_side_argmin_equals_join_form(spark):
+    """The numpy pandas-UDF assignment (``_assign_pass``) must pick exactly
+    the row the broadcast-join + window form (``_assign_join``) picks:
+    6-decimal rounded squared distance, ties to the smaller list id.
+    Seeded vectors with negative coordinates, plus exact distance ties,
+    ties that only appear after rounding, and duplicate centroids listed
+    out of list-id order."""
+    import random
+
+    from hnarchive_spark.operators.kmeans import _assign_join, _assign_pass
+
+    rng = random.Random(20)
+    dim = 4
+    vecs = [[rng.uniform(-3, 3) for _ in range(dim)] for _ in range(150)]
+    vecs += [[round(rng.uniform(-3, 3), 1) for _ in range(dim)] for _ in range(50)]
+    vecs += [
+        [1.0, 0.0, 0.0, 0.0],  # exactly midway between list 7 and list 3
+        [-1.0, -1.0, 0.0, 0.0],  # equidistant from all four axis centroids
+        [0.0, 0.0, 0.0, 0.0],
+        [0.0, 0.0003, 0.0, 0.0],  # 1e-7-apart distances round to one value
+    ]
+    e = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, v array<double>"
+    )
+    axis = [
+        (7, [0.0, 0.0, 0.0, 0.0]),
+        (3, [2.0, 0.0, 0.0, 0.0]),
+        (5, [-2.0, -1.0, 0.0, 0.0]),
+        (1, [-1.0, -2.0, 0.0, 0.0]),
+        (4, [-1.0, 0.0, 0.0, 0.0]),
+        (6, [0.0, -1.0, 0.0, 0.0]),
+        (9, [0.0, 0.0003, 0.0, 0.0003162]),
+    ]
+    rand = [(j, [rng.uniform(-3, 3) for _ in range(dim)]) for j in range(8)]
+    dup = [(10 - j, c) for j, c in rand[:4]] + [(j, c) for j, c in rand[:4]]
+    for cents in (axis, rand, dup):
+        cent_df = spark.createDataFrame(cents, "list_id long, centroid array<double>")
+        got = sorted(map(tuple, _assign_pass(e, cents, keep_vec=False).collect()))
+        want = sorted(map(tuple, _assign_join(e, cent_df, keep_vec=False).collect()))
+        assert got == want

@@ -1,7 +1,7 @@
-"""The items store's per-version max-id record (``_MAX_ID``): ``latest_id``
-reads it instead of scanning, so it must equal a full-scan ``max(id)``
-after every kind of commit, be adopted by stores written without it, and
-never leak from an unpublished or a hardlinked-forward version."""
+"""The items store's commit record carries the snapshot's max id:
+``latest_id`` reads it instead of scanning, so it must equal a full-scan
+``max(id)`` after every kind of commit, be adopted by stores whose
+record has none, and never leak from an unpublished version."""
 
 from __future__ import annotations
 
@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 
 from hnarchive_spark.plans import fixtures as FX
 from hnarchive_spark.sources.hn_api import MockTransport
-from hnarchive_spark.sources.items_store import _MAX_ID, ItemsStore
+from hnarchive_spark.sources.index_version import read_index_record
+from hnarchive_spark.sources.items_store import ItemsStore
 from hnarchive_spark.streaming.livestream import update_items
 
 T0 = FX.T0
@@ -32,8 +33,15 @@ def _scan_max(store) -> int:
     return store.read().agg(F.max("id")).collect()[0][0] or 0
 
 
-def _record(store, v=None):
-    return store._read_max_id(store._current_version() if v is None else v)
+def _record(store):
+    return read_index_record(store.path).get("max_id")
+
+
+def _drop_record(store):
+    """Rewrite the pointer as an older store wrote it: a bare int."""
+    v = store._current_version()
+    with open(os.path.join(store.path, "_CURRENT"), "w") as fh:
+        fh.write(str(v))
 
 
 def _assert_record_matches(store):
@@ -87,20 +95,21 @@ def test_latest_id_matches_full_scan_after_random_commits(spark, tmp_path):
 
 
 def test_store_without_records_reads_and_adopts(spark, tmp_path):
-    """A store whose versions carry no record (written before records
-    existed) is scanned, and its next commit, empty or not, writes one."""
+    """A store whose pointer carries no max id (written before records
+    existed: a bare-int pointer) is scanned, and its next commit, empty or
+    not, records one."""
     store = ItemsStore(spark, str(tmp_path / "store"), bucket_size=10)
     _merge(store, _rows([3, 14, 27]))
-    os.remove(os.path.join(store._version_dir(store._current_version()), _MAX_ID))
+    _drop_record(store)
     assert _record(store) is None
     assert store.latest_id() == 27  # fallback scan
 
     _merge(store, [])  # zero-row commit adopts the record
     assert _record(store) == 27
-    os.remove(os.path.join(store._version_dir(store._current_version()), _MAX_ID))
+    _drop_record(store)
     _merge(store, _rows([5]))  # a merge under the old max adopts it too
     assert _record(store) == 27 and store.latest_id() == 27
-    os.remove(os.path.join(store._version_dir(store._current_version()), _MAX_ID))
+    _drop_record(store)
     store.delete_ids([27])  # and so does a delete of the max
     _assert_record_matches(store)
     assert store.latest_id() == 14
@@ -108,38 +117,27 @@ def test_store_without_records_reads_and_adopts(spark, tmp_path):
 
 def test_unpublished_record_is_never_read(spark, tmp_path, monkeypatch):
     """A crash between the version write and the pointer swap leaves a
-    version dir with a record nobody may read; the next commit, including
-    a zero-row one, replaces that dir instead of building on it."""
+    version dir nobody may read, and the record still names the old max;
+    the next commit, including a zero-row one, replaces that dir instead
+    of building on it."""
+    import hnarchive_spark.sources.items_store as items_store
+
     store = ItemsStore(spark, str(tmp_path / "store"), bucket_size=10)
     _merge(store, _rows(range(1, 8)))
     v = store._current_version()
 
-    def crash(self, new):
+    def crash(path, version, meta=None):
         raise RuntimeError("killed before the swap")
 
-    monkeypatch.setattr(ItemsStore, "_swap_pointer", crash)
+    monkeypatch.setattr(items_store, "publish_index_version", crash)
     with pytest.raises(RuntimeError):
         _merge(store, _rows([40, 41]))
     monkeypatch.undo()
-    assert _record(store, v + 1) == 41  # written, but not published
+    assert os.path.isdir(store._version_dir(v + 1))  # written, but not published
     assert store._current_version() == v and store.latest_id() == 7
+    assert _record(store) == 7
 
     _merge(store, [])  # lands in the crashed commit's dir
     assert store._current_version() == v + 1
     assert _ids(store) == list(range(1, 8))
     _assert_record_matches(store)
-
-
-def test_zero_row_commit_replaces_the_linked_record(spark, tmp_path):
-    """The zero-row path hardlinks the previous version forward; its record
-    must be a new file, so the previous version's record is never written
-    through the shared inode."""
-    store = ItemsStore(spark, str(tmp_path / "store"), bucket_size=10)
-    _merge(store, _rows([2, 9, 13]))
-    v1 = store._current_version()
-    _merge(store, [])
-    v2 = store._current_version()
-    old, new = (os.path.join(store._version_dir(v), _MAX_ID) for v in (v1, v2))
-    assert os.stat(old).st_ino != os.stat(new).st_ino
-    assert os.stat(old).st_nlink == 1 and os.stat(new).st_nlink == 1
-    assert _record(store, v1) == _record(store, v2) == 13

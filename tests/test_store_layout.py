@@ -318,3 +318,40 @@ def test_zero_row_merge_rejects_mistyped_batch(spark, tmp_path):
     # and a well-typed idle tick still commits via the fast path
     store.merge_batch(good_empty, seq_col="seq")
     assert store._current_version() == v1 + 1
+
+
+def test_compact_crash_before_pointer_keeps_old_granularity(spark, tmp_path, monkeypatch):
+    """A compact() killed between writing its snapshot and publishing it
+    must leave the old snapshot AND the old bucket_size: both live in the
+    one commit record.  Were the granularity published separately, a
+    reopen would merge at the new size against the old layout and leave
+    the merged id in the store twice."""
+    import os
+
+    import pytest
+
+    path = str(tmp_path / "store")
+    store = ItemsStore(spark, path, bucket_size=10)
+    rows = [dict(FX.MERGE_BASE[0], id=i) for i in range(1, 31)]
+    store.merge_batch(FX.items_df_with_seq(spark, rows), seq_col="seq")
+
+    real_replace = os.replace
+
+    def crash_at_pointer(src, dst):
+        if str(dst).endswith("_CURRENT"):
+            raise RuntimeError("killed before the pointer swap")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_at_pointer)
+    with pytest.raises(RuntimeError, match="pointer swap"):
+        store.compact(100)
+    monkeypatch.undo()
+
+    reopened = ItemsStore(spark, path)
+    reopened.merge_batch(
+        FX.items_df_with_seq(spark, [dict(FX.MERGE_BASE[0], id=15, score=5)]),
+        seq_col="seq",
+    )
+    ids = [r["id"] for r in reopened.read().select("id").collect()]
+    assert len(ids) == len(set(ids)) == 30
+    assert reopened.bucket_size == 10
