@@ -36,72 +36,83 @@ from hnarchive_spark.operators.similarity import DIM, as_double, sq_dist as _sq_
 # matrix stops being expression-sized.
 ARGMIN_LITERAL_MAX = 1024
 
-def _np_round6_e6(acc):
-    """numpy replica of Spark ``round(d, 6)`` scaled to int64 — the
-    comparison key of the assignment contract.  Spark's Round on
-    DoubleType is BigDecimal.valueOf(d).setScale(6, HALF_UP): HALF_UP on
-    the SHORTEST round-trip decimal representation (Double.toString).
-    Fast path: floor(d*1e6 + 0.5) — exact except when the scaled value
-    sits within float-multiply error of a .5 boundary; those few cells
-    are recomputed with Decimal(repr(d)) (repr() is the same
-    shortest-round-trip decimal as Double.toString), so every cell
-    matches Spark's rounding exactly.  Comparing the scaled int64s is
-    order/tie-equivalent to comparing the rounded doubles (m -> m/1e6 is
-    monotone injective at these magnitudes)."""
+
+def spark_round(d, scale: int):
+    """numpy replica of Spark ``round(d, scale)`` on DoubleType, element for
+    element: ``BigDecimal.valueOf(d).setScale(scale, HALF_UP).doubleValue()``
+    with NaN and +-inf passed through.  A zero result is always +0.0
+    (BigDecimal has no negative zero).
+
+    ``BigDecimal.valueOf`` takes the SHORTEST round-trip decimal of ``d``
+    (``Double.toString``; ``repr`` is the same decimal), and HALF_UP rounds
+    halves away from zero.  Fast path: ``y = d * 10**scale`` rounded to the
+    nearest integer ``m`` is the HALF_UP integer unless ``y`` sits within
+    float error of a .5 boundary, and ``m / 10**scale`` is then exactly
+    Spark's double (``m`` is exact below 2**53 and the division rounds
+    once, as ``doubleValue`` does).  Cells whose fraction lies within
+    ``max(1e-4, |y| * 2**-50)`` of .5 -- at least four float spacings of
+    ``y`` -- are recomputed exactly in ``decimal`` from ``repr(d)``; past
+    ~2**49 that window covers nearly every cell.  Doubles of magnitude
+    2**53 or more are integers and round to themselves."""
     import numpy as np
 
-    y = acc * 1e6
-    fast = np.floor(y + 0.5)
-    frac = y - np.floor(y)
-    boundary = np.abs(frac - 0.5) < 1e-4
-    if boundary.any():
-        from decimal import ROUND_HALF_UP, Decimal
+    d = np.asarray(d, dtype="float64")
+    p = 10.0**scale
+    with np.errstate(over="ignore", invalid="ignore"):
+        y = d * p
+        fy = np.floor(y)
+        frac = y - fy
+        out = (fy + (frac >= 0.5)) / p
+        big = np.abs(d) >= 2.0**53
+        slow = (np.abs(frac - 0.5) < np.maximum(1e-4, np.abs(y) * 2.0**-50)) & ~big
+    np.copyto(out, d, where=big)
+    if slow.any():
+        from decimal import ROUND_HALF_UP, Context, Decimal
 
-        idx = np.nonzero(boundary)
-        exact = [
-            int(
-                Decimal(repr(float(d))).quantize(
-                    Decimal("0.000001"), rounding=ROUND_HALF_UP
-                )
-                * 1_000_000
-            )
-            for d in acc[idx]
+        ctx = Context(prec=64, rounding=ROUND_HALF_UP)
+        q = Decimal(1).scaleb(-scale)
+        idx = np.nonzero(slow)
+        out[idx] = [
+            float(Decimal(repr(float(v))).quantize(q, context=ctx)) for v in d[idx]
         ]
-        fast = fast.astype("int64")
-        fast[idx] = exact
-        return fast
-    return fast.astype("int64")
+    return out + 0.0
 
 
 def _np_argmin(V, cents: list[tuple[int, list[float]]]):
-    """list_id of the nearest centroid per row of ``V`` (n x dim float64).
+    """list_id of the nearest centroid per row of ``V`` (n x dim float64):
+    the row :func:`_assign_join`'s window keeps, ``round(sq_dist, 6)``
+    ascending and then list_id ascending.
 
-    Bit-identical to the join form: the squared distance is
-    accumulated PER DIMENSION across all rows (acc += (x_i-c_i)^2 — the
-    exact IEEE-754 operation order of similarity.sq_dist's sequential
-    zip_with/aggregate fold), rounded via :func:`_np_round6_e6`, and ties
-    break to the smaller list_id (centroid columns ordered by ascending
-    list_id; np.argmin returns the FIRST minimum)."""
+    The squared distance accumulates PER DIMENSION across all rows
+    (acc += (x_i-c_i)^2, the IEEE-754 operation order of similarity.sq_dist's
+    sequential zip_with/aggregate fold) and :func:`spark_round` turns it
+    into the double Spark sorts.  Those doubles are compared as they are,
+    never through a scaled integer: a squared distance is >= 0, where the
+    int64 bit pattern orders exactly as the double does, and NaN is keyed
+    past +inf because Spark sorts NaN after every value.  Ties break to the
+    smaller list_id (columns in ascending list_id; np.argmin returns the
+    FIRST minimum)."""
     import numpy as np
 
     cents = sorted(cents, key=lambda t: t[0])
     lids = np.array([lid for lid, _ in cents], dtype="int64")
     n = V.shape[0]
-    M = np.empty((n, len(cents)), dtype="int64")
+    R = np.empty((n, len(cents)), dtype="float64")
     for j, (_lid, c) in enumerate(cents):
         acc = np.zeros(n, dtype="float64")
         for i, ci in enumerate(c):
             d = V[:, i] - ci
             acc += d * d
-        M[:, j] = _np_round6_e6(acc)
-    return lids[np.argmin(M, axis=1)]
+        R[:, j] = spark_round(acc, 6)
+    key = R.view("int64")
+    key[np.isnan(R)] = np.iinfo("int64").max
+    return lids[np.argmin(key, axis=1)]
 
 
 def _argmin_udf(cents: list[tuple[int, list[float]]]):
-    """pandas UDF: array<double> vector -> nearest list_id (long)."""
+    """pandas UDF: array<double> vector -> nearest list_id (long).
+    ``cents`` comes normalized from :func:`_cent_pairs`."""
     import numpy as np
-
-    cents = [(int(lid), [float(x) for x in c]) for lid, c in cents]
 
     @F.pandas_udf("long")
     def assign(vs: pd.Series) -> pd.Series:
@@ -116,13 +127,9 @@ def _argmin_udf(cents: list[tuple[int, list[float]]]):
 def _pq_codes_udf(by_m: dict[int, list[tuple[int, list[float]]]], sub: int, n_sub: int):
     """pandas UDF: full vector -> array<long> of the n_sub subspace codes,
     ONE Python crossing per row for ALL codebooks (guide §4.1: pass the
-    columns once, batch the work)."""
+    columns once, batch the work).  ``by_m`` comes normalized from
+    :func:`pq_assign`."""
     import numpy as np
-
-    by_m = {
-        int(m): [(int(lid), [float(x) for x in c]) for lid, c in cs]
-        for m, cs in by_m.items()
-    }
 
     @F.pandas_udf("array<long>")
     def codes(vs: pd.Series) -> pd.Series:

@@ -35,6 +35,7 @@ from hnarchive_spark.sources.index_version import (
     write_json_atomic,
 )
 
+from hnarchive_spark.operators.kmeans import _cent_pairs, spark_round
 from hnarchive_spark.operators.similarity import (
     DIM,
     as_double,
@@ -325,93 +326,73 @@ def append_ivf_index(
         assigned.unpersist()
 
 
-def _np_round0(y):
-    """numpy replica of Spark ``round(d, 0)`` on DoubleType, as int64 —
-    the kmeans._np_round6_e6 machinery at scale 0 (and sign-safe: routing
-    rounds COSINES, which can be negative, where HALF_UP means away from
-    zero).  Spark's Round is BigDecimal.valueOf(d).setScale(0, HALF_UP):
-    HALF_UP on the SHORTEST round-trip decimal representation.  Fast
-    path floor(y + 0.5) is exact except within float error of a .5
-    boundary (including the exact negative halves, where floor(y+0.5)
-    rounds toward +inf but HALF_UP rounds away from zero); boundary
-    cells are recomputed with Decimal(repr(y)) — the same shortest
-    round-trip decimal as Double.toString — so every cell matches
-    Spark's rounding exactly."""
-    import numpy as np
-
-    fast = np.floor(y + 0.5)
-    frac = y - np.floor(y)
-    boundary = np.abs(frac - 0.5) < 1e-4
-    if boundary.any():
-        from decimal import ROUND_HALF_UP, Decimal
-
-        idx = np.nonzero(boundary)
-        exact = [
-            int(
-                Decimal(repr(float(v))).quantize(
-                    Decimal("1"), rounding=ROUND_HALF_UP
-                )
-            )
-            for v in y[idx]
-        ]
-        fast = fast.astype("int64")
-        fast[idx] = exact
-        return fast
-    return fast.astype("int64")
-
-
 def _route_driver(qrows, cent_rows, n_probe: int):
-    """DRIVER-side replica of the coarse routing the probes previously ran
-    as a Spark job (crossJoin(broadcast centroids) + round(cosine*1e6)
-    + row_number window + distinct + collect).  Both inputs are bounded
-    by contract — the query set is broadcast-small, the coarse quantizer
-    is n_lists rows — so routing is a metadata-width computation that
-    never needed a job; running it here removes the routing job at probe
-    CONSTRUCTION and the routing subtree's re-execution everywhere the
-    probe frame was referenced in the final plan (guide §1.2/§2.4).
+    """DRIVER-side replica of the coarse routing in
+    ``similarity.ivf_probes`` (crossJoin(broadcast centroids) +
+    ``round(cosine * 1e6, 0).cast("long")`` + row_number window), which the
+    probes previously ran as a Spark job plus a collect.  Both inputs are
+    bounded by contract — the query set is broadcast-small, the coarse
+    quantizer is n_lists rows — so routing is a metadata-width computation
+    that never needed a job; running it here removes the routing job at
+    probe CONSTRUCTION and the routing subtree's re-execution everywhere
+    the probe frame was referenced in the final plan (guide §1.2/§2.4).
 
     Bit-identical to the Spark form: dot and norm accumulate PER
-    DIMENSION in float64 (the exact IEEE-754 operation order of
-    similarity.dot/norm's sequential zip_with/aggregate folds,
-    vectorized across centroids), cosine = dot / (qn * cn) with the same
-    operand order, round(cos * 1e6, 0) via :func:`_np_round0`, and the
-    (ccos DESC, list_id ASC) sort replays the window's total order.
+    DIMENSION in float64 (the IEEE-754 operation order of
+    similarity.dot/norm's sequential zip_with/aggregate folds, vectorized
+    across queries and centroids), cosine = dot / (qn * cn) with the same
+    operand order, :func:`kmeans.spark_round` yields Spark's rounded
+    double, and its long value sorted (ccos DESC, list_id ASC) replays the
+    window's total order.  Where the Spark form raises under ANSI, this
+    raises ValueError naming the ids: a zero ``qn * cn`` (zero-norm query
+    or centroid; Spark's DIVIDE_BY_ZERO) and a NaN or infinite cosine
+    (Spark's CAST_OVERFLOW on the long cast).
 
     ``qrows``: (query_id, qv as float64 list); ``cent_rows``: (list_id,
-    centroid).  Returns [(query_id, qv, qn, list_id, pr)] — one row per
-    (query, probed list), pr in 1..n_probe, queries in input order."""
-    import math
-
+    centroid) pairs from :func:`kmeans._cent_pairs`.  Returns
+    [(query_id, qv, qn, list_id, pr)] — one row per (query, probed list),
+    pr in 1..n_probe, queries in input order."""
     import numpy as np
 
-    cents = sorted(
-        ((c[0], [float(x) for x in c[1]]) for c in cent_rows),
-        key=lambda t: t[0],
-    )
-    out = []
-    if not cents:
-        return out
-    lids = [lid for lid, _ in cents]
+    cents = sorted(cent_rows, key=lambda t: t[0])
+    if not cents or not qrows:
+        return []
+    lids = np.array([lid for lid, _ in cents], dtype="int64")
     C = np.array([c for _, c in cents], dtype="float64")
-    ncols = C.shape[1]
-    cn_acc = np.zeros(len(cents), dtype="float64")
-    for i in range(ncols):
-        cn_acc = cn_acc + C[:, i] * C[:, i]
-    cn = np.sqrt(cn_acc)
-    for qid, qv in qrows:
-        qv = [float(x) for x in qv]
-        qn_acc = 0.0
-        for x in qv:
-            qn_acc = qn_acc + x * x
-        qn = math.sqrt(qn_acc)
-        dacc = np.zeros(len(cents), dtype="float64")
-        for i in range(ncols):
-            dacc = dacc + qv[i] * C[:, i]
-        ccos = _np_round0((dacc / (qn * cn)) * 1_000_000)
-        order = sorted(range(len(cents)), key=lambda j: (-int(ccos[j]), lids[j]))
-        for pr, j in enumerate(order[:n_probe], 1):
-            out.append((int(qid), qv, qn, lids[j], pr))
-    return out
+    Q = np.array([qv for _, qv in qrows], dtype="float64")
+    dot = np.zeros((len(Q), len(C)), dtype="float64")
+    qn2 = np.zeros(len(Q), dtype="float64")
+    cn2 = np.zeros(len(C), dtype="float64")
+    for i in range(C.shape[1]):
+        dot = dot + np.outer(Q[:, i], C[:, i])
+        qn2 = qn2 + Q[:, i] * Q[:, i]
+        cn2 = cn2 + C[:, i] * C[:, i]
+    qn, cn = np.sqrt(qn2), np.sqrt(cn2)
+    den = np.outer(qn, cn)
+    zero = np.argwhere(den == 0)
+    if len(zero):
+        q, j = zero[0]
+        who = f"query_id={qrows[q][0]}" if qn[q] == 0 else f"list_id={lids[j]}"
+        raise ValueError(
+            f"zero-norm routing vector ({who}): the cosine divides by zero "
+            "(Spark raises DIVIDE_BY_ZERO)"
+        )
+    with np.errstate(invalid="ignore", over="ignore"):
+        ccos = spark_round(dot / den * 1_000_000, 0)
+    bad = np.argwhere(~np.isfinite(ccos))
+    if len(bad):
+        q, j = bad[0]
+        raise ValueError(
+            f"routing cosine of query_id={qrows[q][0]} and list_id={lids[j]} "
+            "is not finite (Spark raises CAST_OVERFLOW)"
+        )
+    ccos = ccos.astype("int64")
+    order = np.lexsort((np.broadcast_to(lids, ccos.shape), -ccos), axis=-1)
+    return [
+        (int(qid), qv, float(qn[q]), int(lids[j]), pr)
+        for q, (qid, qv) in enumerate(qrows)
+        for pr, j in enumerate(order[q, :n_probe], 1)
+    ]
 
 
 def probe_ivf_topk(
@@ -440,7 +421,7 @@ def probe_ivf_topk(
     index_path = index_root(index_path)
     cent_df = spark.read.parquet(f"{index_path}/centroids")
     lid_type = cent_df.schema["list_id"].dataType
-    cent_rows = [(r["list_id"], r["centroid"]) for r in cent_df.collect()]
+    cent_rows = _cent_pairs(cent_df.collect())
     qrows = [
         (r["query_id"], r["qv"])
         for r in queries.select(
@@ -728,7 +709,7 @@ def probe_ivfpq_topk(
     # the per-list query residuals).
     cent_df = spark.read.parquet(f"{index_path}/centroids")
     lid_type = cent_df.schema["list_id"].dataType
-    cent_rows = [(r["list_id"], r["centroid"]) for r in cent_df.collect()]
+    cent_rows = _cent_pairs(cent_df.collect())
     qrows = [
         (r["query_id"], r["qv"])
         for r in queries.select(
@@ -755,7 +736,7 @@ def probe_ivfpq_topk(
         # the query's per-probed-list residual, computed driver-side from
         # the SAME collected centroids (qv[i] - centroid[i] is the exact
         # elementwise IEEE op zip_with performed)
-        cent_by = {lid: [float(x) for x in c] for lid, c in cent_rows}
+        cent_by = dict(cent_rows)
         q_res = spark.createDataFrame(
             [
                 (qid, lid, [x - c for x, c in zip(qv, cent_by[lid])])

@@ -15,7 +15,7 @@ items_store bucket-pruning discipline applied to vectors.
 Layout (versioned behind the ``_CURRENT`` pointer, index_version.py):
 
 * ``<root>/vectors/bucket=<b>/`` — (vec_id long, embedding) rows;
-* ``<root>/_META.json`` — ``n_buckets`` (+ the build's row count).
+* ``<root>/_META.json`` — ``n_buckets``.
 
 Lifecycle (the house discipline every persisted family follows):
 build = validated full write into ``v<N+1>`` + atomic pointer swap;
@@ -95,7 +95,7 @@ def build_vec_store(
     )
     write_json_atomic(
         os.path.join(vdir, "_META.json"),
-        {"n_buckets": int(n_buckets), "n_vectors": int(stats["n"])},
+        {"n_buckets": int(n_buckets)},
     )
     publish_index_version(path, new_v)
     return vdir
@@ -184,7 +184,6 @@ def compact_vec_store(spark: SparkSession, path: str) -> str:
     new_v = (current_index_version(path) or 0) + 1
     vdir = os.path.join(path, f"v{new_v}")
     df = spark.read.parquet(old)
-    n = df.count()
     (
         df.repartition("bucket")
         .write.mode("overwrite")
@@ -194,7 +193,7 @@ def compact_vec_store(spark: SparkSession, path: str) -> str:
     )
     write_json_atomic(
         os.path.join(vdir, "_META.json"),
-        {"n_buckets": int(meta["n_buckets"]), "n_vectors": int(n)},
+        {"n_buckets": int(meta["n_buckets"])},
     )
     publish_index_version(path, new_v)
     return vdir

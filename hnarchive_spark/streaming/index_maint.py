@@ -130,8 +130,8 @@ def maintain_text_index(
 ):
     """The ``foreachBatch`` function for text-index maintenance.
 
-    Exposed separately from :func:`stream_index_text` so tests (and batch
-    backfills) can drive the exact per-batch logic without a streaming
+    Run it on a stream with :func:`stream_maintenance`; tests (and batch
+    backfills) can also drive the exact per-batch logic without a streaming
     query: recover a torn predecessor append first, then append with
     skip-on-conflict idempotence."""
 
@@ -303,63 +303,6 @@ def maintain_minhash_index(index_path: str, id_col: str = "doc_id", text_col: st
     return _process
 
 
-def stream_index_minhash(
-    doc_stream: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-):
-    """Document stream → per-micro-batch MinHash index append.  The index
-    must already exist (``build_minhash_index``)."""
-    writer = doc_stream.writeStream.foreachBatch(
-        maintain_minhash_index(index_path, id_col, text_col)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_index_text(
-    doc_stream: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-):
-    """Document stream → per-micro-batch BM25 index append.
-
-    The index must already exist (``build_text_index``); returns the
-    started StreamingQuery.  With ``available_now`` the caller awaits
-    termination for drain-then-stop, mirroring ``stream_merge_into_store``."""
-    writer = doc_stream.writeStream.foreachBatch(
-        maintain_text_index(index_path, id_col, text_col)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_vec_store(
-    vec_stream: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    available_now: bool = True,
-):
-    """Vector stream → per-micro-batch raw-vector-store append (the
-    fetch side stays as fresh as the ANN side it serves alongside)."""
-    writer = vec_stream.writeStream.foreachBatch(
-        maintain_vec_store(store_path, id_col, vec_col)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def _bump_gate_stats(index_path: str, flagged: int, max_e4: int) -> None:
     """Accumulate per-batch GATE counts into the same ``_MAINT_STATS``
     sidecar the append families use (gate-specific keys, so one ledger
@@ -417,26 +360,6 @@ def maintain_contamination_gate(
         return flagged
 
     return _process
-
-
-def stream_contamination_gate(
-    doc_stream: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    threshold_e4: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-):
-    """Document stream → per-micro-batch contamination probe + ledger
-    alerting.  The eval index must already exist
-    (``build_contamination_index``)."""
-    writer = doc_stream.writeStream.foreachBatch(
-        maintain_contamination_gate(index_path, threshold_e4, id_col, text_col)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def maintain_quality_gate(
@@ -512,30 +435,6 @@ def maintain_quality_gate(
     return _process
 
 
-def stream_quality_gate(
-    doc_stream: DataFrame,
-    ledger_path: str,
-    checkpoint_dir: str,
-    threshold_e4: int,
-    model: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-    model_path: str | None = None,
-):
-    """Document stream → per-micro-batch quality scoring + ledger
-    alerting.  ``model_path`` serves scoring from the PUBLISHED
-    quality-model store version (re-resolved each micro-batch)."""
-    writer = doc_stream.writeStream.foreachBatch(
-        maintain_quality_gate(
-            ledger_path, threshold_e4, model, id_col, text_col, model_path
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def maintain_scd2(store_path: str):
     """``foreachBatch`` function for SCD2 dimension maintenance
     (sources/scd2_store.py): each micro-batch of entity events absorbs
@@ -560,17 +459,16 @@ def maintain_scd2(store_path: str):
     return _process
 
 
-def stream_scd2(
-    event_stream: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Event stream → per-micro-batch SCD2 dimension maintenance.  The
-    store must already exist (``build_scd2_store``)."""
-    writer = event_stream.writeStream.foreachBatch(
-        maintain_scd2(store_path)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def stream_maintenance(stream: DataFrame, process, checkpoint_dir: str):
+    """Run a ``foreachBatch`` function (``maintain_*`` here,
+    ``ingest.maintain_ingest``) over ``stream`` until the input available
+    at start is drained: ``availableNow`` trigger, checkpointed at
+    ``checkpoint_dir``.  Returns the started StreamingQuery; the caller
+    awaits termination, as with ``stream_merge_into_store``.  Whatever the
+    function maintains (index, store, ledger) must already exist."""
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )

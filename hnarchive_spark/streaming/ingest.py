@@ -341,20 +341,3 @@ def compact_ingest_store(spark, store_path: str) -> str:
         )
     publish_index_version(store_path, new_v)
     return vdir
-
-
-def stream_ingest(
-    doc_stream: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    **gate_kwargs,
-):
-    """Document stream -> composed gate-before-merge ingest.  Gate
-    configuration passes through to :func:`maintain_ingest`."""
-    writer = doc_stream.writeStream.foreachBatch(
-        maintain_ingest(store_path, **gate_kwargs)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

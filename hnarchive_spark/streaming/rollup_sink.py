@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hnarchive_spark.operators.rollup import DailyRollup
+from hnarchive_spark.streaming.index_maint import stream_maintenance
 
 
 def stream_rollup(
@@ -36,7 +37,6 @@ def stream_rollup(
     record_path: str,
     rollup: DailyRollup,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """events stream -> record store + maintained daily rollup.
 
@@ -62,12 +62,7 @@ def stream_rollup(
         record = spark.read.parquet(record_path).drop("batch_id")
         rollup.refresh(record, batch_df)
 
-    writer = events_stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream_maintenance(events_stream, apply, checkpoint_dir)
 
 
 def rollup_equals_batch(rollup: DailyRollup, record: DataFrame) -> bool:

@@ -20,7 +20,7 @@ from hnarchive_spark.sources.text_index import (
 from hnarchive_spark.streaming.index_maint import (
     maintain_ivfpq_index,
     maintain_text_index,
-    stream_index_text,
+    stream_maintenance,
 )
 from hnarchive_spark.tables import load
 
@@ -132,13 +132,13 @@ def test_stream_text_maintenance_restart_idempotent(spark, tmp_path):
     d.filter(F.col("doc_id") % 8 == 2).write.mode("append").parquet(src)
 
     stream = spark.readStream.schema(d.schema).parquet(src)
-    q = stream_index_text(stream, path, str(tmp_path / "ckpt1"))
+    q = stream_maintenance(stream, maintain_text_index(path), str(tmp_path / "ckpt1"))
     q.awaitTermination()
 
     # new files arrive; the fresh checkpoint forces re-delivery of ALL files
     for m in range(3, 8):
         d.filter(F.col("doc_id") % 8 == m).write.mode("append").parquet(src)
-    q = stream_index_text(stream, path, str(tmp_path / "ckpt2"))
+    q = stream_maintenance(stream, maintain_text_index(path), str(tmp_path / "ckpt2"))
     q.awaitTermination()
 
     full_path = str(tmp_path / "full")
@@ -345,8 +345,8 @@ def test_stream_contamination_gate_end_to_end(spark, tmp_path):
         build_contamination_index,
     )
     from hnarchive_spark.streaming.index_maint import (
+        maintain_contamination_gate,
         maintenance_stats,
-        stream_contamination_gate,
     )
 
     d = load(spark, SF, "documents")
@@ -360,13 +360,17 @@ def test_stream_contamination_gate_end_to_end(spark, tmp_path):
     ).parquet(src)
 
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = stream_contamination_gate(stream, path, str(tmp_path / "ckpt1"), 5_000)
+    q = stream_maintenance(
+        stream, maintain_contamination_gate(path, 5_000), str(tmp_path / "ckpt1")
+    )
     q.awaitTermination()
     st = maintenance_stats(path)
     assert st["gate_flagged"] == n_ev and st["gate_max_e4"] == 10_000
 
     # fresh checkpoint = the at-least-once extreme: everything re-probed
-    q = stream_contamination_gate(stream, path, str(tmp_path / "ckpt2"), 5_000)
+    q = stream_maintenance(
+        stream, maintain_contamination_gate(path, 5_000), str(tmp_path / "ckpt2")
+    )
     q.awaitTermination()
     assert maintenance_stats(path)["gate_flagged"] == 2 * n_ev
 
@@ -448,8 +452,8 @@ def test_stream_quality_gate_end_to_end(spark, tmp_path):
     """Structured Streaming run of the quality gate with availableNow."""
     from hnarchive_spark.operators.quality import fixture_model, quality_scores
     from hnarchive_spark.streaming.index_maint import (
+        maintain_quality_gate,
         maintenance_stats,
-        stream_quality_gate,
     )
 
     d = load(spark, SF, "documents").select("doc_id", "text")
@@ -463,7 +467,7 @@ def test_stream_quality_gate_end_to_end(spark, tmp_path):
     d.write.mode("append").parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
     path = str(tmp_path / "qgate")
-    q = stream_quality_gate(stream, path, str(tmp_path / "ckpt"), thr)
+    q = stream_maintenance(stream, maintain_quality_gate(path, thr), str(tmp_path / "ckpt"))
     q.awaitTermination()
     st = maintenance_stats(path)
     assert st["quality_rejected"] == want and st["quality_batches"] == 1

@@ -22,12 +22,8 @@ from hnarchive_spark.sources.minhash_index import (
     build_minhash_index,
     minhash_index_stats,
 )
-from hnarchive_spark.streaming.index_maint import maintenance_stats
-from hnarchive_spark.streaming.ingest import (
-    maintain_ingest,
-    read_ingested_docs,
-    stream_ingest,
-)
+from hnarchive_spark.streaming.index_maint import maintenance_stats, stream_maintenance
+from hnarchive_spark.streaming.ingest import maintain_ingest, read_ingested_docs
 
 _ARCH_101 = " ".join(f"arch{i}" for i in range(40))
 _ARCH_102 = " ".join(f"barch{i}" for i in range(40))
@@ -151,16 +147,18 @@ def test_stream_ingest_end_to_end_and_restart(spark, gated, tmp_path):
     src = str(tmp_path / "src")
     _batch(spark).write.mode("append").parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = stream_ingest(
+    q = stream_maintenance(
         stream,
-        store,
+        maintain_ingest(
+            store,
+            quality_threshold_e4=5_000,
+            contamination_index_path=str(tmp_path / "ct"),
+            contamination_threshold_e4=0,
+            minhash_index_path=mh,
+            jaccard_threshold=0.8,
+            model=_zzqq_model(spark),
+        ),
         str(tmp_path / "ckpt"),
-        quality_threshold_e4=5_000,
-        contamination_index_path=str(tmp_path / "ct"),
-        contamination_threshold_e4=0,
-        minhash_index_path=mh,
-        jaccard_threshold=0.8,
-        model=_zzqq_model(spark),
     )
     q.awaitTermination()
     assert {
@@ -169,16 +167,18 @@ def test_stream_ingest_end_to_end_and_restart(spark, gated, tmp_path):
     # restart with a FRESH checkpoint = the at-least-once extreme:
     # everything re-delivered, merge must be a no-op
     stream2 = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q2 = stream_ingest(
+    q2 = stream_maintenance(
         stream2,
-        store,
+        maintain_ingest(
+            store,
+            quality_threshold_e4=5_000,
+            contamination_index_path=str(tmp_path / "ct"),
+            contamination_threshold_e4=0,
+            minhash_index_path=mh,
+            jaccard_threshold=0.8,
+            model=_zzqq_model(spark),
+        ),
         str(tmp_path / "ckpt2"),
-        quality_threshold_e4=5_000,
-        contamination_index_path=str(tmp_path / "ct"),
-        contamination_threshold_e4=0,
-        minhash_index_path=mh,
-        jaccard_threshold=0.8,
-        model=_zzqq_model(spark),
     )
     q2.awaitTermination()
     assert read_ingested_docs(spark, store).count() == 4

@@ -160,8 +160,9 @@ def test_stream_maintenance_restart_idempotent(spark, tmp_path):
     checkpoint (full re-delivery) must leave the index unchanged and the
     ledger must record the skipped volume."""
     from hnarchive_spark.streaming.index_maint import (
+        maintain_minhash_index,
         maintenance_stats,
-        stream_index_minhash,
+        stream_maintenance,
     )
 
     d = load(spark, SF, "documents").select("doc_id", "text")
@@ -171,11 +172,13 @@ def test_stream_maintenance_restart_idempotent(spark, tmp_path):
     d.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
 
     stream = spark.readStream.schema(d.schema).parquet(src)
-    q = stream_index_minhash(stream, path, str(tmp_path / "ck1"))
+    q = stream_maintenance(stream, maintain_minhash_index(path), str(tmp_path / "ck1"))
     q.awaitTermination()
     want = minhash_index_stats(spark, path)
 
-    q = stream_index_minhash(stream, path, str(tmp_path / "ck2"))  # re-deliver all
+    q = stream_maintenance(  # re-deliver all
+        stream, maintain_minhash_index(path), str(tmp_path / "ck2")
+    )
     q.awaitTermination()
     assert minhash_index_stats(spark, path) == want
     stats = maintenance_stats(path)

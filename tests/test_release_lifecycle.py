@@ -131,8 +131,8 @@ def test_ingest_then_release_reconcile(spark, tmp_path):
     release over the ingested store — the ingest ledger's merged count,
     the store's row count, and the release manifest's raw count are one
     number, and the release conserves from there."""
-    from hnarchive_spark.streaming.index_maint import maintenance_stats
-    from hnarchive_spark.streaming.ingest import read_ingested_docs, stream_ingest
+    from hnarchive_spark.streaming.index_maint import maintenance_stats, stream_maintenance
+    from hnarchive_spark.streaming.ingest import maintain_ingest, read_ingested_docs
     from hnarchive_spark.tables import load
 
     d = load(spark, SF, "documents")
@@ -146,12 +146,10 @@ def test_ingest_then_release_reconcile(spark, tmp_path):
     model = spark.range(256).select(
         F.col("id").alias("bucket"), F.lit(10_000).alias("w_e4")
     )
-    q = stream_ingest(
+    q = stream_maintenance(
         spark.readStream.schema("doc_id long, text string").parquet(src),
-        store,
+        maintain_ingest(store, quality_threshold_e4=5_000, model=model),
         str(tmp_path / "ckpt"),
-        quality_threshold_e4=5_000,
-        model=model,
     )
     q.awaitTermination()
 

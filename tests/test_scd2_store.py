@@ -17,7 +17,7 @@ from hnarchive_spark.sources.scd2_store import (
     build_scd2_store,
     read_scd2,
 )
-from hnarchive_spark.streaming.index_maint import maintain_scd2, stream_scd2
+from hnarchive_spark.streaming.index_maint import maintain_scd2, stream_maintenance
 from hnarchive_spark.tables import load
 
 SF = "/root/testdata/sf0.001"
@@ -121,11 +121,12 @@ def test_stream_scd2_maintenance_restart_idempotent(spark, tmp_path):
 
     schema = e.schema
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = stream_scd2(stream, path, str(tmp_path / "ckpt1"))
+    q = stream_maintenance(stream, maintain_scd2(path), str(tmp_path / "ckpt1"))
     q.awaitTermination()
 
     e.filter(F.col("ts") >= SPLIT2).coalesce(1).write.mode("append").parquet(src)
-    q = stream_scd2(stream, path, str(tmp_path / "ckpt2"))  # fresh ckpt: re-deliver all
+    # fresh ckpt: re-deliver all
+    q = stream_maintenance(stream, maintain_scd2(path), str(tmp_path / "ckpt2"))
     q.awaitTermination()
 
     assert _dim_rows(spark, path) == _full_rows(spark)
