@@ -5,19 +5,8 @@ comment tree with an N+1 recursive point-query loop — one SELECT per node.
 The Spark-native replacement is a recursive CTE (``WITH RECURSIVE``,
 Spark 4.1): one declarative query whose fixpoint the engine drives
 internally (UnionLoop in the physical plan) — no per-level driver round
-trips at all.  A level-at-a-time BFS loop (one broadcast join per level,
-O(depth) jobs) remains as the fallback for engines without recursive CTEs
-and as the independent cross-check in tests.
-
-Scale notes:
-* the frontier is tiny relative to ``items`` -> broadcast it, so each step
-  is a broadcast hash join against the (parent-partitioned) items scan with
-  pushed-down ``parent IS NOT NULL``;
-* ``localCheckpoint`` truncates the growing lineage each level (without it
-  the plan doubles every iteration and the driver chokes long before data
-  size matters);
-* depth is unbounded in HN threads, so the loop runs to fixpoint, not to a
-  constant (SURVEY §7 'what's hard' (c)).
+trips at all.  Depth is unbounded in HN threads, so the recursion runs to
+fixpoint, not to a constant (SURVEY §7 'what's hard' (c)).
 """
 
 from __future__ import annotations
@@ -43,31 +32,18 @@ def tree_closure(
     Returns ``(root_id, id, depth)`` — every node of every requested tree
     with its distance from the root (root itself at depth 0).
 
-    Primary plan: a recursive CTE (Spark 4.1 ``WITH RECURSIVE``) — ONE
-    declarative query, no per-level driver round-trips (the engine runs the
-    fixpoint internally).  Falls back to the level-at-a-time BFS loop if the
-    engine rejects recursive CTEs.
+    One recursive CTE (Spark 4.1 ``WITH RECURSIVE``): ONE declarative
+    query, no per-level driver round-trips (the engine runs the fixpoint
+    internally).  An empty ``root_ids`` gives zero rows.
     """
-    try:
-        return _tree_closure_recursive(items, root_ids, id_col, parent_col, max_depth)
-    except Exception:
-        return _tree_closure_bfs(items, root_ids, id_col, parent_col, max_depth)
-
-
-def _tree_closure_recursive(
-    items: DataFrame,
-    root_ids: Sequence[int],
-    id_col: str,
-    parent_col: str,
-    max_depth: int | None,
-) -> DataFrame:
     spark = items.sparkSession
     view = f"_tree_closure_src_{next(_view_counter)}"
     items.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(parent_col).cast("long").alias("parent"),
     ).createOrReplaceTempView(view)
-    roots = ", ".join(str(int(r)) for r in root_ids)
+    # ``IN ()`` does not parse; ``IN (NULL)`` matches no row
+    roots = ", ".join(str(int(r)) for r in root_ids) or "NULL"
     bound = f"AND c.depth < {int(max_depth)}" if max_depth is not None else ""
     return spark.sql(f"""
         WITH RECURSIVE closure AS (
@@ -79,49 +55,6 @@ def _tree_closure_recursive(
         )
         SELECT root_id, id, depth FROM closure
     """)
-
-
-def _tree_closure_bfs(
-    items: DataFrame,
-    root_ids: Sequence[int],
-    id_col: str = "id",
-    parent_col: str = "parent",
-    max_depth: int | None = None,
-) -> DataFrame:
-    """Level-at-a-time BFS fallback: one broadcast join per level, fixpoint
-    detected with ``isEmpty`` — O(depth) jobs."""
-    edges = items.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(parent_col).cast("long").alias("parent"),
-    ).filter(F.col("parent").isNotNull())
-
-    frontier = items.filter(F.col(id_col).isin(list(root_ids))).select(
-        F.col(id_col).cast("long").alias("root_id"),
-        F.col(id_col).cast("long").alias("id"),
-        F.lit(0).alias("depth"),
-    )
-    # NOTE: no per-level localCheckpoint — on Spark 4.1 a union of
-    # checkpointed levels trips attribute resolution ("key not found") when
-    # the closure is later self-joined against the source. Lineage grows
-    # linearly with depth (one join per level), which is fine for
-    # comment-tree depths; beyond ~100 levels cache+count the frontier.
-    result = frontier
-    depth = 0
-    while True:
-        if max_depth is not None and depth >= max_depth:
-            break
-        e, f = edges.alias("e"), frontier.alias("f")
-        nxt = e.join(F.broadcast(f), F.col("e.parent") == F.col("f.id")).select(
-            F.col("f.root_id").alias("root_id"),
-            F.col("e.id").alias("id"),
-            (F.col("f.depth") + 1).alias("depth"),
-        )
-        if nxt.isEmpty():
-            break
-        result = result.union(nxt)
-        frontier = nxt
-        depth += 1
-    return result
 
 
 def tree_edges_for_roots(items: DataFrame, root_ids: Sequence[int]) -> DataFrame:

@@ -2,7 +2,7 @@
 
 * q_merge_coalesce — the U1 merge matrix (coalesce vs overwrite vs insert,
   duplicate ids in one batch) via operators.merge.merge_items;
-* q_tree_closure — G1 BFS fixpoint vs a DuckDB recursive CTE;
+* q_tree_closure — G1 Spark recursive-CTE fixpoint vs a DuckDB recursive CTE;
 * q_children_sorted — Q6/G2 per-parent time-ordered children;
 * q_fix_ptags — F1 HTML repair + F7 URL templating;
 * q_display_date — F4 epoch -> display-string formatting.
@@ -170,7 +170,7 @@ def _tree_oracle_sql() -> str:
     "q_tree_closure",
     oracle=_tree_oracle_sql(),
     doc="G1 build_item_tree (hnarchive.py:306-319) as a recursive CTE "
-    "(engine-internal fixpoint, single job; BFS loop fallback) instead of "
+    "(engine-internal fixpoint, single job) instead of "
     "O(nodes) point queries.",
 )
 def q_tree_closure(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,8 +29,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hnarchive_spark.sources.index_version import (
+    checkpoint_count,
     current_index_version,
     index_root,
+    novel_rows,
     publish_index_version,
     write_json_atomic,
 )
@@ -111,10 +113,9 @@ def append_lsh_index(
         .persist()
     )
     try:
-        kept = _filter_duplicate_ids(
-            spark, assigned, root, on_conflict, part_col="bucket"
+        kept, n_new = checkpoint_count(
+            novel_rows(spark, assigned, root, "vec_id", "bucket", on_conflict)
         )
-        n_new = kept.count()
         if n_new == 0:
             return 0
         (
@@ -214,59 +215,6 @@ def build_ivf_index(
     )
 
 
-def _filter_duplicate_ids(
-    spark,
-    assigned: DataFrame,
-    data_dir: str,
-    on_conflict: str = "error",
-    part_col: str = "list_id",
-) -> DataFrame:
-    """Guard the frozen-quantizer appends against re-delivered ids (ADVICE
-    r10): the surrounding system re-delivers ids by design (store merges,
-    update re-crawls), and a duplicate row here silently corrupts results
-    — twice-counted ADC partial sums in ``probe_ivfpq_topk``'s groupBy-sum,
-    duplicate candidates in IVF probes.
-
-    The check is partition-pruned: an id re-delivered with the SAME vector
-    routes to the same partition (coarse list for IVF/IVF-PQ, signature
-    bucket for LSH — ``part_col`` names it), so scanning only the batch's
-    own partitions finds it — O(touched partitions), not O(index).  (An id
-    whose vector CHANGED may route elsewhere and escape this check; that
-    case is an update, which no append-only index supports — rebuild
-    handles it.)  ``assigned`` must be (vec_id, <part_col>, ...) and
-    already persisted (it is re-consumed by the caller's write).
-
-    ``on_conflict="error"`` raises on overlap; ``on_conflict="skip"``
-    returns ``assigned`` with the already-indexed ids anti-joined out —
-    the idempotent form streaming maintenance needs (a re-delivered
-    micro-batch appends nothing the second time)."""
-    if on_conflict not in ("error", "skip"):
-        raise ValueError(f"on_conflict must be 'error' or 'skip', got {on_conflict!r}")
-    touched = sorted(r[0] for r in assigned.select(part_col).distinct().collect())
-    if not touched:
-        return assigned
-    existing = (
-        spark.read.parquet(data_dir)
-        .filter(F.col(part_col).isin(touched))
-        .select("vec_id")
-    )
-    if on_conflict == "skip":
-        return assigned.join(existing, "vec_id", "left_anti")
-    dup = [
-        r[0]
-        for r in existing.join(
-            assigned.select("vec_id").distinct(), "vec_id", "left_semi"
-        ).limit(5).collect()
-    ]
-    if dup:
-        raise ValueError(
-            f"append: batch contains already-indexed vec_ids (sample: {dup}); "
-            "appending would double their contribution in probes. Dedupe the "
-            "batch upstream, rebuild the index, or pass on_conflict='skip'."
-        )
-    return assigned
-
-
 def append_ivf_index(
     spark,
     batch: DataFrame,
@@ -287,7 +235,7 @@ def append_ivf_index(
     handled by a periodic full rebuild
     (:func:`rebuild_ivf_index`), not per-batch.  Returns the number of
     vectors appended (with ``on_conflict="skip"``, already-indexed ids
-    are dropped instead of raising — see :func:`_filter_duplicate_ids`)."""
+    are dropped instead of raising — see ``index_version.novel_rows``)."""
     path = index_root(path)
     centroids = spark.read.parquet(f"{path}/centroids")
     b = batch.select(
@@ -310,8 +258,9 @@ def append_ivf_index(
         .persist()
     )
     try:
-        kept = _filter_duplicate_ids(spark, assigned, f"{path}/lists", on_conflict)
-        n_new = kept.count()
+        kept, n_new = checkpoint_count(
+            novel_rows(spark, assigned, f"{path}/lists", "vec_id", "list_id", on_conflict)
+        )
         if n_new == 0:
             return 0
         (
@@ -614,8 +563,9 @@ def append_ivfpq_index(
     # can fail — every exit path after the persist must release it, as
     # append_ivf_index / append_lsh_index already do
     try:
-        kept = _filter_duplicate_ids(spark, assigned, f"{path}/codes", on_conflict)
-        n_new = kept.count()
+        kept, n_new = checkpoint_count(
+            novel_rows(spark, assigned, f"{path}/codes", "vec_id", "list_id", on_conflict)
+        )
         if n_new == 0:
             return 0
         if residual:

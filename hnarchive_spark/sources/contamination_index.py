@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from hnarchive_spark.operators.bloom import bloom_build, bloom_prune
 from hnarchive_spark.operators.dedup import word_shingles
 from hnarchive_spark.sources.index_version import (
+    checkpoint_count,
     current_index_version,
     index_root,
     publish_index_version,
@@ -144,8 +145,7 @@ def append_contamination_index(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ).dropDuplicates(["doc_id"])
     existing = spark.read.parquet(_tot_path(path)).select("doc_id")
-    novel = b.join(existing, "doc_id", "left_anti").localCheckpoint(eager=True)
-    n_new = novel.count()
+    novel, n_new = checkpoint_count(b.join(existing, "doc_id", "left_anti"))
     if n_new == 0:
         return 0
     sh = word_shingles(novel).localCheckpoint(eager=True)

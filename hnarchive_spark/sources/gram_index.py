@@ -47,8 +47,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hnarchive_spark.sources.index_version import (
+    checkpoint_count,
     current_index_version,
     index_root,
+    novel_rows,
     publish_index_version,
     write_json_atomic,
 )
@@ -142,10 +144,7 @@ def append_gram_index(
         .persist()
     )
     try:
-        buckets = [r.bucket for r in fresh.select("bucket").distinct().collect()]
-        existing = spark.read.parquet(root).filter(F.col("bucket").isin(buckets))
-        novel = fresh.join(existing, "h", "left_anti")
-        n_new = novel.count()
+        novel, n_new = checkpoint_count(novel_rows(spark, fresh, root, "h", "bucket"))
         if n_new == 0:
             return 0
         (

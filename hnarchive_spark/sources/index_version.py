@@ -29,6 +29,11 @@ manifests) goes through :func:`write_json_atomic`: a tmp file, then one
 Durability: process-crash safe, not power-loss safe: nothing is fsynced.
 A killed process leaves either the old record or the new one, never a
 torn one; a power loss may lose a rename the OS had not yet flushed.
+
+The module also holds the one presence check of every idempotent
+append, :func:`novel_rows` (the rows of a batch not yet in a bucketed
+store or index), and :func:`checkpoint_count`, which materializes a
+batch-sized frame and reads its row count from that same job.
 """
 
 from __future__ import annotations
@@ -36,6 +41,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
+
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 _POINTER = "_CURRENT"
 
@@ -149,3 +157,75 @@ def prune_index_versions(path: str) -> list[str]:
             shutil.rmtree(full)
             removed.append(full)
     return removed
+
+
+def checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` eagerly local-checkpointed, and its row count.
+
+    The count is an ``observe`` metric of the checkpoint job itself, so
+    knowing the size costs no second scan.  It is exact: the metric is
+    collected in the checkpoint job's result stage, whose accumulator
+    updates the scheduler applies once per partition (a retried or
+    speculative task's duplicate result is dropped), and an empty input
+    reads 0.  For batch-sized frames only: the blocks live on the
+    executors until the frame is garbage-collected on the driver."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return out, int(obs.get["n"])
+
+
+def novel_rows(
+    spark,
+    frame: DataFrame,
+    data_dir: str,
+    key: str,
+    part_col: str,
+    on_conflict: str = "skip",
+) -> DataFrame:
+    """The rows of ``frame`` whose ``key`` is not yet stored under
+    ``data_dir`` — the presence check of every idempotent append.
+
+    ``data_dir`` is parquet partitioned by ``part_col``, and ``frame``
+    carries ``part_col`` computed the way the store computes it, so a
+    stored copy of a key can only live in a partition the batch itself
+    touches.  The batch's distinct partition values are collected (at
+    most the store's partition count) and the store read is pruned to
+    them: O(touched partitions), never O(store).  (A key whose partition
+    value CHANGED — a re-routed vector — escapes the check; that is an
+    update, which no append-only store supports, and rebuild handles
+    it.)
+
+    Returns ``frame`` unchanged while ``data_dir`` does not exist yet.
+    ``on_conflict="skip"`` anti-joins the stored keys away (the form
+    streaming maintenance needs: a re-delivered micro-batch appends
+    nothing the second time); ``on_conflict="error"`` raises with a
+    sample of the stored keys instead, and otherwise returns ``frame``.
+    The result is lazy: ``frame`` is read again by whatever consumes it,
+    so a caller that persisted ``frame`` keeps it until then."""
+    if on_conflict not in ("error", "skip"):
+        raise ValueError(f"on_conflict must be 'error' or 'skip', got {on_conflict!r}")
+    if not os.path.isdir(data_dir):
+        return frame
+    touched = sorted(r[0] for r in frame.select(part_col).distinct().collect())
+    if not touched:
+        return frame
+    existing = (
+        spark.read.parquet(data_dir)
+        .filter(F.col(part_col).isin(touched))
+        .select(key)
+    )
+    if on_conflict == "skip":
+        return frame.join(existing, key, "left_anti")
+    dup = [
+        r[0]
+        for r in existing.join(frame.select(key).distinct(), key, "left_semi")
+        .limit(5)
+        .collect()
+    ]
+    if dup:
+        raise ValueError(
+            f"append: batch contains already-indexed {key}s (sample: {dup}); "
+            "appending would double their contribution in probes. Dedupe the "
+            "batch upstream, rebuild the index, or pass on_conflict='skip'."
+        )
+    return frame

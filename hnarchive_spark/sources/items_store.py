@@ -46,6 +46,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from hnarchive_spark.operators.merge import merge_items
 from hnarchive_spark.schema import ITEMS_SCHEMA
 from hnarchive_spark.sources.index_version import (
+    checkpoint_count,
     current_index_version,
     publish_index_version,
     read_index_record,
@@ -380,14 +381,7 @@ class ItemsStore:
             return removed
         touched = sorted({int(i) // self.bucket_size for i in ids})
         current = raw.filter(F.col(_BUCKET_COL).isin(touched)).select(*item_cols)
-        # the checkpoint job also counts the kept rows
-        obs = Observation()
-        kept = (
-            current.filter(~F.col("id").isin(ids))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_kept = obs.get["n"]
+        kept, n_kept = checkpoint_count(current.filter(~F.col("id").isin(ids)))
         removed = current.count() - n_kept
         if not removed:
             return 0

@@ -58,8 +58,10 @@ from hnarchive_spark.operators.dedup import (
     word_shingles,
 )
 from hnarchive_spark.sources.index_version import (
+    checkpoint_count,
     current_index_version,
     index_root,
+    novel_rows,
     publish_index_version,
 )
 
@@ -142,16 +144,9 @@ def append_minhash_index(
     ).dropDuplicates(["doc_id"])
     b = b.withColumn("d_bucket", _d_bucket()).persist()
     try:
-        id_buckets = [r[0] for r in b.select("d_bucket").distinct().collect()]
-        if not id_buckets:
-            return 0
-        existing = (
-            spark.read.parquet(_docs_path(path))
-            .filter(F.col("d_bucket").isin(id_buckets))
-            .select("doc_id")
+        novel, n_new = checkpoint_count(
+            novel_rows(spark, b, _docs_path(path), "doc_id", "d_bucket")
         )
-        novel = b.join(existing, "doc_id", "left_anti").localCheckpoint(eager=True)
-        n_new = novel.count()
         if n_new == 0:
             return 0
         banded, sh = _banded(novel, "doc_id", "text")

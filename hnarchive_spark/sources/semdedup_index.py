@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from hnarchive_spark.operators.kmeans import kmeans_assign, kmeans_assign_frozen
 from hnarchive_spark.operators.similarity import as_double, dot, norm, semdedup_prune
 from hnarchive_spark.sources.index_version import (
+    checkpoint_count,
     current_index_version,
     index_root,
     publish_index_version,
@@ -216,8 +217,7 @@ def append_semdedup_index(
         )
     else:  # legacy layout: keep the store schema consistent
         novel = novel.select(F.col("vec_id"), F.col("list_id"))
-    novel = novel.localCheckpoint(eager=True)
-    n_new = novel.count()
+    novel, n_new = checkpoint_count(novel)
     if n_new == 0:
         return 0
     (

@@ -37,8 +37,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hnarchive_spark.sources.index_version import (
+    checkpoint_count,
     current_index_version,
     index_root,
+    novel_rows,
     publish_index_version,
     write_json_atomic,
 )
@@ -112,15 +114,13 @@ def append_vec_store(
     """O(batch) idempotent append into the CURRENT version: the presence
     check anti-joins only the batch's OWN bucket partitions (an id always
     routes to the same bucket, so scanning the touched buckets finds any
-    re-delivered row — the _filter_duplicate_ids discipline), then the
+    re-delivered row — ``index_version.novel_rows``), then the
     survivors append one file per touched bucket.  Intra-batch duplicate
     ids are collapsed first (dropDuplicates, the append_lsh_index rule):
     the store-presence anti-join alone can't see two copies of an id
     arriving in the SAME micro-batch, and a double row would break the
     point-fetch uniqueness invariant build_vec_store enforces.  Returns
     rows appended; a fully re-delivered micro-batch appends 0."""
-    from hnarchive_spark.sources.ann_index import _filter_duplicate_ids
-
     n_buckets = int(vec_store_meta(path)["n_buckets"])
     b = (
         batch.select(
@@ -132,10 +132,9 @@ def append_vec_store(
         .persist()
     )
     try:
-        kept = _filter_duplicate_ids(
-            spark, b, _vectors_path(path), on_conflict, part_col="bucket"
+        kept, n_new = checkpoint_count(
+            novel_rows(spark, b, _vectors_path(path), "vec_id", "bucket", on_conflict)
         )
-        n_new = kept.count()
         if n_new == 0:
             return 0
         (

@@ -41,9 +41,17 @@ Stage semantics (each stage optional — pass None to skip):
    store-ahead would hide the doc from every future dedup probe), the
    doc-store append is the commit marker.
 
+Counting: the deduped batch and each stage's survivors are
+materialized once by ``index_version.checkpoint_count``, which reads the
+stage's row count from that checkpoint job — a ledger count costs no job
+of its own.  An empty micro-batch returns 0 before any ledger write or
+file; a stage whose input was emptied by an earlier one is skipped, and
+its ledger key stays unbumped.
+
 Restart/redelivery: every stage recomputes (advisory ledger
-double-count, the gate contract), and the merge's presence check makes
-a fully re-delivered batch a no-op — zero rows appended anywhere.
+double-count, the gate contract), and the merge's presence check
+(``index_version.novel_rows``, as stage 0's URL check) makes a fully
+re-delivered batch a no-op — zero rows appended anywhere.
 
 ONE configuration per store: the docs table's schema follows the verb's
 configuration (``url_col`` adds a ``curl`` column), so all writers of a
@@ -62,6 +70,13 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hnarchive_spark.sources.index_version import (
+    checkpoint_count,
+    current_index_version,
+    index_root,
+    novel_rows,
+    publish_index_version,
+)
 from hnarchive_spark.streaming.index_maint import _bump
 
 # doc-store bucket count: matches the minhash docs-table discipline so
@@ -70,14 +85,10 @@ N_STORE_BUCKETS = 64
 
 
 def _store_docs_path(store_path: str) -> str:
-    from hnarchive_spark.sources.index_version import index_root
-
     return os.path.join(index_root(store_path), "docs")
 
 
 def _store_urls_path(store_path: str) -> str:
-    from hnarchive_spark.sources.index_version import index_root
-
     return os.path.join(index_root(store_path), "urls")
 
 
@@ -127,21 +138,22 @@ def maintain_ingest(
     crash permanently block a document behind a phantom url row)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> int:
-        if batch_df.isEmpty():
-            return 0
         spark = batch_df.sparkSession
         cols = [F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")]
         if url_col is not None:
             from hnarchive_spark.functions.urls import canonical_url
 
             cols.append(canonical_url(F.col(url_col)).alias("curl"))
-        b = batch_df.select(*cols).dropDuplicates(["doc_id"])
-        b = b.localCheckpoint(eager=True)  # batch-sized by definition
-        n_rows = b.count()
+        # batch-sized by definition
+        b, n_rows = checkpoint_count(
+            batch_df.select(*cols).dropDuplicates(["doc_id"])
+        )
+        if not n_rows:
+            return 0
         counts = {"ingest_batches": 1, "ingest_rows": n_rows}
 
         # ---- stage 0: canonical-URL dedup (the cheapest gate first) ----
-        if url_col is not None and n_rows:
+        if url_col is not None:
             from pyspark.sql import Window
 
             wu = Window.partitionBy("curl").orderBy("doc_id")
@@ -150,25 +162,20 @@ def maintain_ingest(
                 .filter(F.col("_ur") == 1)
                 .drop("_ur")
             )
-            urls_dir = _store_urls_path(store_path)
-            if os.path.isdir(urls_dir):
-                kb = kept.withColumn("u_bucket", _u_bucket())
-                ubuckets = [
-                    r[0] for r in kb.select("u_bucket").distinct().collect()
-                ]
-                existing = (
-                    spark.read.parquet(urls_dir)
-                    .filter(F.col("u_bucket").isin(ubuckets))
-                    .select("curl")
-                )
-                kept = kb.join(existing, "curl", "left_anti").drop("u_bucket")
-            kept = kept.localCheckpoint(eager=True)
-            n_kept = kept.count()
+            kept, n_kept = checkpoint_count(
+                novel_rows(
+                    spark,
+                    kept.withColumn("u_bucket", _u_bucket()),
+                    _store_urls_path(store_path),
+                    "curl",
+                    "u_bucket",
+                ).drop("u_bucket")
+            )
             counts["ingest_url_dup"] = n_rows - n_kept
             b, n_rows = kept, n_kept
 
         # ---- stage 1: quality gate (reject low scores + unscorable) ----
-        if quality_threshold_e4 is not None:
+        if quality_threshold_e4 is not None and n_rows:
             from hnarchive_spark.operators.quality import (
                 fixture_model,
                 quality_scores,
@@ -186,16 +193,16 @@ def maintain_ingest(
                 m = fixture_model(spark)
             # scored is metadata-width (doc_id, n_tokens, quality_e4) —
             # checkpoint once, derive all three stage counts from it
-            scored = quality_scores(b, m).localCheckpoint(eager=True)
-            n_scored_all = scored.count()
-            kept = b.join(
-                scored.filter(
-                    F.col("quality_e4") >= quality_threshold_e4
-                ).select("doc_id"),
-                "doc_id",
-                "left_semi",
-            ).localCheckpoint(eager=True)
-            n_kept = kept.count()
+            scored, n_scored_all = checkpoint_count(quality_scores(b, m))
+            kept, n_kept = checkpoint_count(
+                b.join(
+                    scored.filter(
+                        F.col("quality_e4") >= quality_threshold_e4
+                    ).select("doc_id"),
+                    "doc_id",
+                    "left_semi",
+                )
+            )
             counts["ingest_quality_rejected"] = n_scored_all - n_kept
             counts["ingest_unscored"] = n_rows - n_scored_all
             b, n_rows = kept, n_kept
@@ -209,10 +216,9 @@ def maintain_ingest(
             rep = probe_contamination_train(
                 spark, b, contamination_index_path
             ).filter(F.col("contamination_e4") > contamination_threshold_e4)
-            kept = b.join(
-                rep.select("doc_id"), "doc_id", "left_anti"
-            ).localCheckpoint(eager=True)
-            n_kept = kept.count()
+            kept, n_kept = checkpoint_count(
+                b.join(rep.select("doc_id"), "doc_id", "left_anti")
+            )
             counts["ingest_contaminated"] = n_rows - n_kept
             b, n_rows = kept, n_kept
 
@@ -230,12 +236,13 @@ def maintain_ingest(
                     read_ingested_docs(spark, store_path),
                     jaccard_threshold,
                 )
-                kept = b.join(
-                    pairs.select(F.col("d1").alias("doc_id")).distinct(),
-                    "doc_id",
-                    "left_anti",
-                ).localCheckpoint(eager=True)
-                n_kept = kept.count()
+                kept, n_kept = checkpoint_count(
+                    b.join(
+                        pairs.select(F.col("d1").alias("doc_id")).distinct(),
+                        "doc_id",
+                        "left_anti",
+                    )
+                )
                 counts["ingest_neardup"] = n_rows - n_kept
                 b, n_rows = kept, n_kept
             else:
@@ -244,22 +251,16 @@ def maintain_ingest(
         # ---- stage 4: idempotent merge (presence anti-join, novel only) --
         n_merged = 0
         if n_rows:
-            bb = b.withColumn("d_bucket", _d_bucket())
             docs_dir = _store_docs_path(store_path)
-            if os.path.isdir(docs_dir):
-                buckets = [
-                    r[0] for r in bb.select("d_bucket").distinct().collect()
-                ]
-                existing = (
-                    spark.read.parquet(docs_dir)
-                    .filter(F.col("d_bucket").isin(buckets))
-                    .select("doc_id")
+            novel, n_merged = checkpoint_count(
+                novel_rows(
+                    spark,
+                    b.withColumn("d_bucket", _d_bucket()),
+                    docs_dir,
+                    "doc_id",
+                    "d_bucket",
                 )
-                novel = bb.join(existing, "doc_id", "left_anti")
-            else:
-                novel = bb
-            novel = novel.localCheckpoint(eager=True)
-            n_merged = novel.count()
+            )
             if n_merged:
                 if minhash_index_path is not None:
                     # index FIRST (self-healing order; module docstring)
@@ -311,11 +312,6 @@ def compact_ingest_store(spark, store_path: str) -> str:
     at the atomic pointer swap (index_version.py) — readers that
     resolved the old root keep a complete tree until
     prune_index_versions.  Returns the new version directory."""
-    from hnarchive_spark.sources.index_version import (
-        current_index_version,
-        publish_index_version,
-    )
-
     docs = spark.read.parquet(_store_docs_path(store_path))
     urls = None
     if os.path.isdir(_store_urls_path(store_path)):

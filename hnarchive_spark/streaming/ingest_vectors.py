@@ -38,7 +38,10 @@ wins.  Same self-healing analysis as the doc verb's index-ahead merge,
 pointed at the serving stack.
 
 Conservation law (per batch, ledger keys ``vingest_*``):
-``rows == neardup + appended + skipped``.
+``rows == neardup + appended + skipped``.  The row counts are read from
+the jobs that checkpoint the batch and the gate's survivors
+(``index_version.checkpoint_count``), so counting adds no job; an empty
+micro-batch returns 0 before any ledger write or file.
 
 Restart/redelivery: the gate re-probes (advisory double-count, the
 gate contract), both appends are presence-checked — a fully
@@ -54,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hnarchive_spark.sources.index_version import checkpoint_count
 from hnarchive_spark.streaming.index_maint import _bump
 
 
@@ -74,22 +78,20 @@ def maintain_vector_ingest(
     guard through to the gate's pair join (semdedup_probe_batch)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> int:
-        if batch_df.isEmpty():
-            return 0
         spark = batch_df.sparkSession
-        b = (
+        # batch-sized by definition
+        b, n_rows = checkpoint_count(
             batch_df.select(
                 F.col(id_col).cast("long").alias("vec_id"),
                 F.col(vec_col).alias("embedding"),
-            )
-            .dropDuplicates(["vec_id"])
-            .localCheckpoint(eager=True)  # batch-sized by definition
+            ).dropDuplicates(["vec_id"])
         )
-        n_rows = b.count()
+        if not n_rows:
+            return 0
         counts = {"vingest_batches": 1, "vingest_rows": n_rows}
 
         # ---- stage 1: semantic near-dup gate (batch vs archive) ----
-        if semdedup_index_path is not None and t_e6 is not None and n_rows:
+        if semdedup_index_path is not None and t_e6 is not None:
             from hnarchive_spark.sources.semdedup_index import (
                 semdedup_probe_batch,
             )
@@ -113,10 +115,9 @@ def maintain_vector_ingest(
                 t_e6,
                 max_pivots=max_pivots,
             )
-            kept = b.join(
-                drops.select("vec_id").distinct(), "vec_id", "left_anti"
-            ).localCheckpoint(eager=True)
-            n_kept = kept.count()
+            kept, n_kept = checkpoint_count(
+                b.join(drops.select("vec_id").distinct(), "vec_id", "left_anti")
+            )
             counts["vingest_neardup"] = n_rows - n_kept
             b, n_rows = kept, n_kept
         else:

@@ -65,7 +65,7 @@ def test_contamination_bloom_prunes_before_semi_join(spark):
 
 def test_tree_closure_uses_recursive_cte(spark):
     """q_tree_closure must run as ONE recursive-CTE job (UnionLoop operator),
-    not the per-level BFS fallback with its driver round-trips."""
+    not a per-level loop with driver round-trips."""
     from hnarchive_spark.plans.registry import all_queries
 
     df = all_queries()["q_tree_closure"](spark, SF)

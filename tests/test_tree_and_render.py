@@ -1,5 +1,5 @@
-"""G1/G2/E5 tests: BFS closure fixpoint on deep/multi-root trees; HTML page
-rendering (golden-structure assertions, SURVEY §5.3)."""
+"""G1/G2/E5 tests: recursive-CTE closure fixpoint on deep/multi-root
+trees; HTML page rendering (golden-structure assertions, SURVEY §5.3)."""
 
 from __future__ import annotations
 
@@ -26,6 +26,13 @@ def test_closure_multi_root_single_pass(spark):
     assert roots == {1, 40}
     tree40 = {r["id"] for r in out if r["root_id"] == 40}
     assert tree40 == {40, 44}  # poll + its comment (not its pollopts)
+
+
+def test_closure_of_no_roots_is_empty(spark):
+    items = FX.items_df(spark, FX.TREE_ITEMS)
+    out = tree_closure(items, [])
+    assert out.columns == ["root_id", "id", "depth"]
+    assert out.collect() == []
 
 
 def test_closure_max_depth_bound(spark):
